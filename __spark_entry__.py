@@ -2,9 +2,9 @@
 
 ``entry(spark)`` runs the flagship pricing-summary query at sf0.001;
 ``queries()`` / ``oracle_sql()`` expose every registered operator from
-SURVEY.md §2 plus the §7.4 extensions (see ting_data_etl_spark.registry —
-registration ORDER puts the §2 spec surface first so a budget-limited
-correctness check always covers it).
+SURVEY.md §2 plus the §7.4 extensions, in the fixed registration order of
+``ting_data_etl_spark.registry.load_all``: the §2 spec surface first, so a
+budget-limited correctness check that samples a prefix always covers it.
 """
 
 from __future__ import annotations
@@ -26,7 +26,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 + §7.4."""
+    """One entry per implemented operator from SURVEY.md §2 + §7.4, in
+    registration order (spec surface first)."""
     return dict(registry.QUERIES)
 
 

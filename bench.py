@@ -105,15 +105,8 @@ def main() -> None:
     # Full per-query map → committed side file (the driver's tail capture
     # truncates long lines — BENCH_r04/r05 lost their parsed payload that
     # way). The FINAL stdout line stays compact: totals + the 10 slowest.
-    try:
-        from ting_data_etl_spark.rotation import load_plan
-
-        rnd = (load_plan() or {}).get("round", 0)
-    except Exception:
-        rnd = 0
     full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"BENCH_LOCAL_r{rnd:02d}.json" if rnd else "BENCH_LOCAL.json",
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
     )
     with open(full_path, "w") as f:
         json.dump(

@@ -11,53 +11,6 @@ sys.path.insert(0, "/root/repo")
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _self_heal_precommit_guard() -> None:
-    """Install the rotation pre-commit hook if missing (fresh container).
-
-    Round 10 showed the guard's manual installation does not survive a
-    container boundary; any pytest run now re-installs it idempotently so
-    a fresh environment cannot commit a torn rotation plan un-ritualized.
-    """
-    import os
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hook = os.path.join(repo, ".git", "hooks", "pre-commit")
-    guard = os.path.join(repo, "tools", "precommit_rotation_guard.py")
-    if not os.path.isdir(os.path.join(repo, ".git")) or not os.path.exists(guard):
-        return
-    try:
-        if os.path.exists(hook):
-            with open(hook) as f:
-                if "precommit_rotation_guard" in f.read():
-                    return
-        # announce the mutation (ADVICE r11: a silent .git/hooks write as
-        # an import side effect surprises contributors; a silent FAILURE
-        # leaves the repo committable un-ritualized with no trace)
-        print(
-            "[conftest] installing rotation pre-commit guard "
-            f"({os.path.relpath(guard, repo)} --install)",
-            file=sys.stderr,
-        )
-        subprocess.run(
-            [sys.executable, guard, "--install"],
-            check=True,
-            capture_output=True,
-            timeout=30,
-        )
-    except (OSError, subprocess.SubprocessError) as e:
-        # never let self-healing break a test run — but say it broke
-        print(
-            f"[conftest] rotation guard install FAILED ({e}); commits are "
-            "unguarded until `python tools/precommit_rotation_guard.py "
-            "--install` succeeds",
-            file=sys.stderr,
-        )
-
-
-_self_heal_precommit_guard()
-
-
 @pytest.fixture(scope="session")
 def spark():
     from ting_data_etl_spark.session import get_spark

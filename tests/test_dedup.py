@@ -134,58 +134,59 @@ class TestSimhashRetune:
         assert int(sigs.max()) >= (1 << 59)
 
 
+def _union_find(nodes: list[int], pairs: list[tuple[int, int]]) -> dict:
+    """Reference CC: each node labeled with its component's min id."""
+    parent = {n: n for n in nodes}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+def _jump_components(spark, nodes: list[int], pairs: list[tuple[int, int]]):
+    from ting_data_etl_spark.operators.dedup import connected_components_jump
+
+    got = {
+        r.doc_id: r.component
+        for r in connected_components_jump(
+            spark.createDataFrame([(n,) for n in nodes], "doc_id long"),
+            spark.createDataFrame(pairs, "doc_a long, doc_b long"),
+        ).collect()
+    }
+    assert got == _union_find(nodes, pairs)
+    return got
+
+
 class TestConnectedComponents:
     def test_chain_two_components_singleton(self, spark):
-        from ting_data_etl_spark.operators.dedup import connected_components
-
-        nodes = spark.createDataFrame(
-            [(i,) for i in range(1, 8)], "doc_id long"
-        )
         # chain 1-2-3-4 (diameter forces >1 iteration), pair 5-6, singleton 7
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (5, 6)], "doc_a long, doc_b long"
+        got = _jump_components(
+            spark, list(range(1, 8)), [(1, 2), (2, 3), (3, 4), (5, 6)]
         )
-        got = {
-            r.doc_id: r.component
-            for r in connected_components(nodes, pairs).collect()
-        }
         assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 7}
 
     def test_empty_pairs_all_singletons(self, spark):
-        from ting_data_etl_spark.operators.dedup import connected_components
-
-        nodes = spark.createDataFrame([(i,) for i in range(3)], "doc_id long")
-        pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-        got = {
-            r.doc_id: r.component
-            for r in connected_components(nodes, pairs).collect()
-        }
+        got = _jump_components(spark, list(range(3)), [])
         assert got == {0: 0, 1: 1, 2: 2}
 
 
 class TestPointerJumpCC:
-    def test_matches_label_propagation(self, spark):
-        from ting_data_etl_spark.operators.dedup import (
-            connected_components,
-            connected_components_jump,
-        )
-
-        nodes = spark.createDataFrame([(i,) for i in range(1, 12)], "doc_id long")
-        pairs = spark.createDataFrame(
-            # long chain (deep graph), a star, a pair, singletons
+    def test_matches_union_find(self, spark):
+        # long chain (deep graph), a star, a pair, singletons
+        got = _jump_components(
+            spark,
+            list(range(1, 12)),
             [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (8, 9), (8, 10), (9, 10)],
-            "doc_a long, doc_b long",
         )
-        a = {
-            r.doc_id: r.component
-            for r in connected_components(nodes, pairs).collect()
-        }
-        b = {
-            r.doc_id: r.component
-            for r in connected_components_jump(nodes, pairs).collect()
-        }
-        assert a == b
-        assert b[6] == 1 and b[10] == 8 and b[7] == 7 and b[11] == 11
+        assert got[6] == 1 and got[10] == 8 and got[7] == 7 and got[11] == 11
 
     def test_matches_on_lsh_pairs(self, spark, sf_dir):
         from ting_data_etl_spark.operators.dedup import (

@@ -691,6 +691,39 @@ def test_multiday_interleaved_evolution(spark, sf_dir):
         D.INCR_BATCH_MOD, D.INCR_BATCH_REM = prev_b
 
 
+def test_arrival_gate_restores_aqe_when_the_batch_body_raises(
+    spark, sf_dir, monkeypatch
+):
+    """A small drop turns AQE off for its batch body; when that body raises
+    (here: its first join), the finally must still restore the batch
+    session's prior value, or every later micro-batch of the stream runs
+    with the leaked setting."""
+    from ting_data_etl_spark.operators.incremental import (
+        streaming_incremental_arrival_gate,
+    )
+
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    real_join = DataFrame.join
+    failed_sessions = []
+
+    def join_fails_with_aqe_off(self, *args, **kwargs):
+        # only the gate body switches AQE off, so this fails inside it
+        if self.sparkSession.conf.get(key) == "false":
+            failed_sessions.append(self.sparkSession)
+            raise RuntimeError("planted gate-body failure")
+        return real_join(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "join", join_fails_with_aqe_off)
+    with pytest.raises(Exception):
+        streaming_incremental_arrival_gate(spark, sf_dir)
+    monkeypatch.undo()
+    assert failed_sessions, "the gate body never ran with AQE off"
+    assert failed_sessions[0].conf.get(key) == "true"
+    assert spark.conf.get(key) == "true"
+
+
 def test_arrival_gate_small_drop_prunes_index_scan(spark, sf_dir):
     """A small drop's probe must push its band In-set into the bucketed
     index SCAN (row-group skipping at production file sizes) — the

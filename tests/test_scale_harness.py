@@ -71,27 +71,6 @@ class TestScaleCorpusGenerator:
         assert cfg["kmeans_lists"] == 8
 
 
-class TestBurstStressHarness:
-    """Smoke for tools/burst_stress.py (BURST_STRESS_r07 evidence)."""
-
-    def test_gen_burst_events_plants_hot_user_and_burst(self, spark):
-        from tools.burst_stress import (
-            BURST_SHARE,
-            BURST_WIDTH,
-            HOT_FRACTION,
-            TIME_RANGE,
-            gen_burst_events,
-        )
-
-        ev = gen_burst_events(spark, 50_000)
-        assert ev.columns == ["event_id", "user_id", "t", "v"]
-        n = ev.count()
-        hot = ev.filter(F.col("user_id") == 0).count() / n
-        burst = ev.filter(F.col("t") < int(TIME_RANGE * BURST_WIDTH)).count() / n
-        assert abs(hot - HOT_FRACTION) < 0.02
-        assert burst >= BURST_SHARE - 0.02
-
-
 class TestFanoutStressHarness:
     """Smoke for tools/fanout_stress.py (FANOUT_STRESS_r07 evidence)."""
 

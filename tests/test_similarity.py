@@ -302,6 +302,28 @@ class TestRecallReportScaleShape:
         want = sorted(map(tuple, S.topk_per_query(ref_pairs).collect()))
         assert got == want
 
+    def test_dense_kernel_rejects_null_embedding_by_id(self, spark):
+        """A null (or ragged) corpus vector has no place in the matmul: the
+        kernel must fail with a message naming the row, not crash later
+        inside numpy."""
+        import pytest
+
+        from ting_data_etl_spark.operators import similarity as S
+
+        d = 4
+        corpus = spark.createDataFrame(
+            [(1, [1, 0, 0, 0], 1.0), (7, None, 0.0), (9, [0, 1, 0, 0], 1.0)],
+            "neighbor_id long, cv array<bigint>, cn double",
+        ).coalesce(1)
+        queries_rows = spark.createDataFrame(
+            [(1, [1] * d, 2.0)], "query_id long, qv array<bigint>, qn double"
+        ).collect()
+        with pytest.raises(Exception) as err:
+            S._dense_topk_candidates(corpus, queries_rows, S.TOP_K).collect()
+        msg = str(err.value)
+        assert "ValueError" in msg
+        assert "null or ragged cv" in msg and "neighbor_id [7]" in msg
+
     def test_two_phase_topk_matches_single_window(self, spark, sf_dir):
         """Salted phase-1 + re-rank must equal the gated baseline's exact
         top-k for the same queries."""

@@ -135,7 +135,7 @@ SELECT c_custkey, c_name, c_acctbal FROM v2
 """
 
 
-@register("cdc_upsert_snapshot", defer=True, oracle=_SQL_UPSERT)
+@register("cdc_upsert_snapshot", oracle=_SQL_UPSERT)
 def cdc_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply a synthesized I/U/D batch to the customer snapshot."""
     snapshot = load_table(spark, sf_dir, "customer")
@@ -219,7 +219,7 @@ WHERE k1 IS NULL OR k2 IS NULL
 """
 
 
-@register("cdc_snapshot_diff", defer=True, oracle=_SQL_SNAPSHOT_DIFF)
+@register("cdc_snapshot_diff", oracle=_SQL_SNAPSHOT_DIFF)
 def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the I/U/D changelog from two snapshot versions — CDC inverted.
 

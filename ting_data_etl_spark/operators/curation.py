@@ -933,28 +933,19 @@ def final_selection_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _final_selection_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone composition itself (see :func:`final_selection_df`)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ting_data_etl_spark.operators.sampling import corpus_budget_head
     from ting_data_etl_spark.operators.similarity import dedup_semdedup_prune
 
-    # OPTIMIZATION r16 (guide §2.6 — overlap independent jobs): the two
-    # inputs are independent pipelines over different tables (span-status
-    # = the text chain over documents; semdedup = the embedding chain),
-    # each an eagerly-materialized session memo. Building them from two
-    # driver threads lets the second build's jobs back-fill executors the
-    # first build's stragglers leave idle — cold-pass win only (warm both
-    # are memo hits). Two threads, not more: enough to fill the tail.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_status = pool.submit(span_status_df, spark, sf_dir)
-        f_sem = pool.submit(dedup_semdedup_prune, spark, sf_dir)
-        status = f_status.result().select("doc_id", "status")
-        sem = (
-            f_sem.result()
-            .withColumnRenamed("vec_id", "doc_id")
-            .select("doc_id")
-            .withColumn("sem_pruned", F.lit(True))
-        )
+    # the two inputs are eagerly-materialized session memos, built one
+    # after the other: concurrent builds race the memo and checkpoint
+    # lifetimes (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)
+    status = span_status_df(spark, sf_dir).select("doc_id", "status")
+    sem = (
+        dedup_semdedup_prune(spark, sf_dir)
+        .withColumnRenamed("vec_id", "doc_id")
+        .select("doc_id")
+        .withColumn("sem_pruned", F.lit(True))
+    )
     kept_pred = F.col("status").isin("kept", "kept_trimmed")
     st = status.join(sem, "doc_id", "left").localCheckpoint(eager=True)
     surv = st.filter(kept_pred & F.col("sem_pruned").isNull()).select("doc_id")

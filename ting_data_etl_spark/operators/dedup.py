@@ -1280,93 +1280,6 @@ def _unpersist_ids(spark, ids: set[int]) -> None:
             m.get(k).unpersist(False)
 
 
-def connected_components(
-    nodes: DataFrame, pairs: DataFrame, max_iters: int = CC_MAX_ITERS
-) -> DataFrame:
-    """Min-label propagation to a fixpoint: (doc_id, component).
-
-    The canonical iterative algorithm on Spark: each round joins the
-    current labels across the edge set and takes the per-node minimum —
-    two shuffles per round, converging in O(component diameter) rounds
-    (near-dup clusters are shallow, so typically ≤ 5). ``localCheckpoint``
-    truncates the lineage each round so the plan does not grow with the
-    iteration count — the standard guard for driver-side iteration. At
-    larger diameters use :func:`connected_components_jump` (pointer
-    jumping, O(log n) rounds, pinned equal by the tests).
-    Fixpoint detection is an exact count of changed labels, so
-    termination is data-driven, with ``max_iters`` as the safety bound.
-    """
-    # Materialize the PAIR set before the symmetric union references it
-    # twice. persist+count, NOT localCheckpoint: localCheckpoint jobs over
-    # plans containing Arrow/pandas-UDF stages have been observed to wedge
-    # a python worker (one task hangs forever) while normal SQL execution
-    # of the same plan completes — so cache through the SQL path first and
-    # only checkpoint plans whose inputs are already materialized.
-    spark = nodes.sparkSession
-    pairs = pairs.persist()
-    pairs.count()
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    edges, edge_ids = _tracked_checkpoint(edges)
-    pairs.unpersist()
-    labels = nodes.select("doc_id", F.col("doc_id").alias("component"))
-    labels, label_ids = _tracked_checkpoint(labels)
-    # try/finally so the edge checkpoint — and, on ANY failure path
-    # (no-fixpoint raise, a Spark error mid-round), the current label
-    # generation — are unpersisted instead of leaking for the process
-    # lifetime. On success the final label checkpoint must STAY persisted:
-    # it backs the returned (lineage-truncated) DataFrame.
-    converged = False
-    # every id this loop has persisted and not yet freed — so a failure at
-    # ANY point (even between a checkpoint and the label_ids handoff)
-    # unpersists the mid-round generation too, not just the last handed-off
-    # one. On success it holds exactly the final label generation.
-    pending = set(label_ids)
-    try:
-        for _ in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges["dst"] == labels["doc_id"])
-                .groupBy("src")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            updated = (
-                labels.join(
-                    neighbor_min, labels["doc_id"] == neighbor_min["src"], "left"
-                )
-                .select(
-                    "doc_id",
-                    F.col("component").alias("old"),
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("nbr_min"), F.col("component")),
-                    ).alias("component"),
-                )
-            )
-            updated, new_ids = _tracked_checkpoint(updated)
-            pending |= new_ids
-            changed = updated.filter(F.col("component") < F.col("old")).count()
-            labels = updated.drop("old")
-            # free the superseded label generation — only blocks THIS loop made
-            _unpersist_ids(spark, label_ids)
-            pending -= label_ids
-            label_ids = new_ids
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components: no fixpoint in {max_iters} iters"
-            )
-        converged = True
-    finally:
-        _unpersist_ids(spark, edge_ids)
-        if not converged:
-            _unpersist_ids(spark, pending)
-    return labels
-
-
 _STAGED_COMPONENTS: dict[tuple[str, str], str] = {}
 
 #: Which input tables each staged-components key derives its labels from.
@@ -1628,7 +1541,7 @@ def staged_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Staging it once gives each consumer a narrow parquet scan instead of
     re-running signature + band join — and feeding the iterative CC loop
     from a parquet scan keeps Arrow-UDF stages out of checkpointed plans
-    (the wedge hazard ``connected_components`` documents). Fingerprinted
+    (the wedge hazard ``connected_components_jump`` documents). Fingerprinted
     exactly like the labels stage: source (mtime, size) + constants token.
     """
     import os
@@ -1674,20 +1587,28 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def connected_components_jump(
     nodes: DataFrame, pairs: DataFrame, max_iters: int = CC_MAX_ITERS
 ) -> DataFrame:
-    """Connected components via min-label propagation + pointer jumping.
+    """Connected components via min-label propagation + pointer jumping:
+    (doc_id, component), every node labeled with its component's min id.
 
-    The round-compressed variant of :func:`connected_components` for deep
-    graphs: each round takes one neighbor hop (min over adjacent labels, as
-    in plain propagation) and then a POINTER JUMP — every node re-labels to
-    its label's label (``comp := comp(comp)``, a self-join on the label
-    table). Labels are always valid node ids, so the jump is well-defined;
-    chains of length n collapse in O(log n) rounds instead of O(n) (the
-    same round-compression goal as Kiveris et al.'s large-star/small-star,
-    with a simpler invariant). Fixpoint = labels unchanged; output
-    identical to plain propagation (equality pytest-pinned on chains,
-    triangles, and the LSH pair set).
+    Each round takes one neighbor hop (min over adjacent labels, the
+    canonical propagation step) and then a POINTER JUMP — every node
+    re-labels to its label's label (``comp := comp(comp)``, a self-join on
+    the label table). Labels are always valid node ids, so the jump is
+    well-defined; chains of length n collapse in O(log n) rounds instead of
+    the O(n) of plain propagation (the same round-compression goal as
+    Kiveris et al.'s large-star/small-star, with a simpler invariant).
+    ``localCheckpoint`` truncates the lineage per generation so the plan
+    does not grow with the iteration count. Fixpoint = labels unchanged,
+    data-driven, with ``max_iters`` as the safety bound. Output equals a
+    union-find over the same pairs (pytest-pinned on chains, triangles,
+    and the LSH pair set).
     """
-    # persist+count, not localCheckpoint — see connected_components
+    # Materialize the PAIR set before the symmetric union references it
+    # twice. persist+count, NOT localCheckpoint: localCheckpoint jobs over
+    # plans containing Arrow/pandas-UDF stages have been observed to wedge
+    # a python worker (one task hangs forever) while normal SQL execution
+    # of the same plan completes — so cache through the SQL path first and
+    # only checkpoint plans whose inputs are already materialized.
     spark = nodes.sparkSession
     pairs = pairs.persist()
     pairs.count()
@@ -1708,9 +1629,14 @@ def connected_components_jump(
     # concurrently running corpus-scale query for the loop's lifetime.)
     prev_total = None
     converged = False
-    # all persisted-but-not-yet-freed ids — see connected_components: a
-    # failure between a mid-round checkpoint (hop, first jump) and the
-    # label_ids handoff must still free those generations
+    # try/finally so the edge checkpoint — and, on ANY failure path
+    # (no-fixpoint raise, a Spark error mid-round), every pending label
+    # generation — is unpersisted instead of leaking for the process
+    # lifetime. ``pending`` holds every id this loop persisted and has not
+    # yet freed, so a failure between a mid-round checkpoint (hop, first
+    # jump) and the label_ids handoff frees those generations too. On
+    # success it holds exactly the final label generation, which must STAY
+    # persisted: it backs the returned (lineage-truncated) DataFrame.
     pending = set(label_ids)
     try:
         for _ in range(max_iters):
@@ -1772,8 +1698,8 @@ def connected_components_jump(
             )
         converged = True
     finally:
-        # see connected_components: edges always; every pending generation
-        # on failure (the final one backs the returned DataFrame on success)
+        # edges always; every pending generation on failure (the final one
+        # backs the returned DataFrame on success)
         _unpersist_ids(spark, edge_ids)
         if not converged:
             _unpersist_ids(spark, pending)
@@ -1812,7 +1738,7 @@ FROM agg
 """
 
 
-@register("graph_near_dup_stats", defer=True, oracle=_sql_graph_stats)
+@register("graph_near_dup_stats", oracle=_sql_graph_stats)
 def graph_near_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shape metrics of the near-dup candidate graph, one summary row.
 

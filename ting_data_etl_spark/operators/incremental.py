@@ -1638,68 +1638,71 @@ def streaming_incremental_arrival_gate(
         # batch, every later leg reads it, and the finally releases it
         # with the batch — per-trigger state, not cross-batch caching.
         batch_df = batch_df.persist()
-        g = gopher_metrics_df(batch_df).select("doc_id", "passes_gopher")
-        bands_b = minhash_signatures_df(batch_df).select(
-            "doc_id", bands_explode_col
-        )
-        # SMALL drops (the land-and-gate-immediately case) additionally
-        # key-prune the index SCAN: the drop's distinct band values are a
-        # bounded collect (<= PROBE_PRUNE_KEYS by the size gate), pushed
-        # into the bucketed scan as an In filter — with the index sorted
-        # by (j, band) within buckets, parquet row-group stats skip
-        # everything the drop doesn't touch, so a tiny drop's probe reads
-        # index-touched row groups, not the index. Large drops touch
-        # ~every band; for them the no-shuffle bucketed join is the win
-        # and the extra signature pass would cost more than it prunes.
-        idx = standing_capped
-        n_rows = (
-            rows_by_batch[batch_id]
-            if batch_id < len(rows_by_batch)
-            else batch_df.count()
-        )
-        # OPTIMIZATION r16 (guide §2.1): for a SMALL drop, AQE fragments
-        # the per-trigger write into ~10 one-task query-stage jobs, each
-        # paying ~0.1 s of driver re-planning — on a plan whose joins are
-        # already fixed by construction (bucketed index scan, broadcast
-        # drop side). Disable adaptive execution for the small-drop batch
-        # body only — size-keyed like the In-prune path, NOT a local-mode
-        # constant: a big drop (where AQE's coalescing/skew handling can
-        # matter) keeps it on. Restored in the finally with the persist.
+        # the batch body may switch AQE off (below); the finally restores
+        # the session conf and releases the persist on every exit path
         spark_b = batch_df.sparkSession
         aqe_key = "spark.sql.adaptive.enabled"
         prev_aqe = spark_b.conf.get(aqe_key)
-        if n_rows <= GATE_AQE_OFF_ROWS:
-            spark_b.conf.set(aqe_key, "false")
-        if n_rows * MINHASH_BANDS <= PROBE_PRUNE_KEYS:
-            bands_b = bands_b.localCheckpoint(eager=True)
-            vals = [
-                r["band"] for r in bands_b.select("band").distinct().collect()
-            ]
-            idx = standing_capped.filter(F.col("band").isin(vals))
-        hits = (
-            bands_b.alias("b")
-            .join(
-                idx.alias("c"),
-                (F.col("b.j") == F.col("c.j"))
-                & (F.col("b.band") == F.col("c.band")),
-            )
-            .groupBy(F.col("b.doc_id").alias("doc_id"))
-            .agg(F.min(F.col("c.doc_id")).alias("dup_of"))
-        )
-        out = (
-            batch_df.select("doc_id")
-            .join(g, "doc_id")
-            .join(hits, "doc_id", "left")
-            .select(
-                "doc_id",
-                "passes_gopher",
-                "dup_of",
-                F.col("dup_of").isNotNull().alias("is_dup"),
-            )
-        )
-        # overwrite into a per-batch-id dir: a micro-batch retry reproduces
-        # the identical directory instead of appending duplicates
         try:
+            g = gopher_metrics_df(batch_df).select("doc_id", "passes_gopher")
+            bands_b = minhash_signatures_df(batch_df).select(
+                "doc_id", bands_explode_col
+            )
+            # SMALL drops (the land-and-gate-immediately case) additionally
+            # key-prune the index SCAN: the drop's distinct band values are a
+            # bounded collect (<= PROBE_PRUNE_KEYS by the size gate), pushed
+            # into the bucketed scan as an In filter — with the index sorted
+            # by (j, band) within buckets, parquet row-group stats skip
+            # everything the drop doesn't touch, so a tiny drop's probe reads
+            # index-touched row groups, not the index. Large drops touch
+            # ~every band; for them the no-shuffle bucketed join is the win
+            # and the extra signature pass would cost more than it prunes.
+            idx = standing_capped
+            n_rows = (
+                rows_by_batch[batch_id]
+                if batch_id < len(rows_by_batch)
+                else batch_df.count()
+            )
+            # OPTIMIZATION r16 (guide §2.1): for a SMALL drop, AQE fragments
+            # the per-trigger write into ~10 one-task query-stage jobs, each
+            # paying ~0.1 s of driver re-planning — on a plan whose joins are
+            # already fixed by construction (bucketed index scan, broadcast
+            # drop side). Disable adaptive execution for the small-drop batch
+            # body only — size-keyed like the In-prune path, NOT a local-mode
+            # constant: a big drop (where AQE's coalescing/skew handling can
+            # matter) keeps it on.
+            if n_rows <= GATE_AQE_OFF_ROWS:
+                spark_b.conf.set(aqe_key, "false")
+            if n_rows * MINHASH_BANDS <= PROBE_PRUNE_KEYS:
+                bands_b = bands_b.localCheckpoint(eager=True)
+                vals = [
+                    r["band"]
+                    for r in bands_b.select("band").distinct().collect()
+                ]
+                idx = standing_capped.filter(F.col("band").isin(vals))
+            hits = (
+                bands_b.alias("b")
+                .join(
+                    idx.alias("c"),
+                    (F.col("b.j") == F.col("c.j"))
+                    & (F.col("b.band") == F.col("c.band")),
+                )
+                .groupBy(F.col("b.doc_id").alias("doc_id"))
+                .agg(F.min(F.col("c.doc_id")).alias("dup_of"))
+            )
+            out = (
+                batch_df.select("doc_id")
+                .join(g, "doc_id")
+                .join(hits, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    "passes_gopher",
+                    "dup_of",
+                    F.col("dup_of").isNotNull().alias("is_dup"),
+                )
+            )
+            # overwrite into a per-batch-id dir: a micro-batch retry reproduces
+            # the identical directory instead of appending duplicates
             out.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(base, f"batch_{batch_id}")
             )

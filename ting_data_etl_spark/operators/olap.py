@@ -34,7 +34,7 @@ FROM documents GROUP BY source
 """
 
 
-@register("text_length_quantiles", defer=True, oracle=_SQL_QUANTILES)
+@register("text_length_quantiles", oracle=_SQL_QUANTILES)
 def text_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document-length distribution (exact p50/p90/p99).
 

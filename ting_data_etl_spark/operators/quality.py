@@ -85,7 +85,7 @@ LATERAL (VALUES
 """
 
 
-@register("dq_lineitem_expectations", defer=True, oracle=_SQL_DQ)
+@register("dq_lineitem_expectations", oracle=_SQL_DQ)
 def dq_lineitem_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expectation suite over lineitem: 5 invariants + composite-key
     uniqueness, one scan."""
@@ -140,7 +140,7 @@ LATERAL (VALUES
 """
 
 
-@register("table_stats_lineitem", defer=True, oracle=_SQL_TABLE_STATS)
+@register("table_stats_lineitem", oracle=_SQL_TABLE_STATS)
 def table_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE TABLE-style column statistics in one scan.
 
@@ -277,7 +277,7 @@ def _bounded_rel_error(rel_error: Column, metric: Column) -> Column:
     )
 
 
-@register("stats_sketch_accuracy", defer=True)
+@register("stats_sketch_accuracy")
 def stats_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate sketches vs exact answers, with measured relative error.
 

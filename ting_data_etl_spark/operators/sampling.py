@@ -78,7 +78,7 @@ WHERE {_sql_bucket("doc_id", "sample")} < {SAMPLE_PCT}
 """
 
 
-@register("sample_hash_mod", defer=True, oracle=_SQL_SAMPLE)
+@register("sample_hash_mod", oracle=_SQL_SAMPLE)
 def sample_hash_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible 20% (= SAMPLE_PCT) subsample — a pure pushed-down filter.
 
@@ -120,7 +120,7 @@ FROM kept GROUP BY source
 """
 
 
-@register("corpus_weighted_mixture", defer=True, oracle=_SQL_MIXTURE)
+@register("corpus_weighted_mixture", oracle=_SQL_MIXTURE)
 def corpus_weighted_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted source mixture: keep each doc iff hash < its source's rate.
 
@@ -152,7 +152,7 @@ FROM (
 """
 
 
-@register("stratified_split", defer=True, oracle=_SQL_SPLIT)
+@register("stratified_split", oracle=_SQL_SPLIT)
 def stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRATIFIED 80/10/10 train/val/test: exact proportions per source.
 

@@ -88,7 +88,7 @@ def cosine_udf():
 # Measured split (sf0.1, local[32]): the UDF wins on the bucketed pair
 # stages (SRP 7.9→3.9 s, embedding pairs 3.7→1.8 s, IVF-kmeans 3.7→2.6 s),
 # where the join has already shrunk the pair count. The dense
-# query×corpus stages (brute force, label-IVF, the sampled exact truth)
+# query×corpus stages (brute force, the sampled exact truth)
 # use neither form: Arrow-shipping two 64-dim vectors for EVERY pair
 # loses to the interpreted fold, and the fold itself measured 210 s at a
 # ×30 corpus — both pay O(Q·N) per-pair overhead. They run the matmul
@@ -98,33 +98,35 @@ def cosine_udf():
 # back.
 
 
-def _np_from_list_array(arr, n: int) -> "np.ndarray | None":
-    """(n, d) float64 view of an Arrow list<int64> column, offset-safe.
+def _dense_matrix(cv, nids: np.ndarray, d: int) -> np.ndarray:
+    """(n, d) float64 view of an Arrow list<int64> ``cv`` column, offset-safe.
 
-    ``flatten()`` respects slicing offsets; returns None when rows are
-    null or ragged (caller falls back to the per-row path)."""
-    if arr.null_count:
-        return None
-    flat = np.asarray(arr.flatten(), dtype=np.float64)
-    if n == 0 or flat.size % n:
-        return None
-    return flat.reshape(n, -1)
+    ``flatten()`` respects slicing offsets. A null or ragged row has no
+    place in the matmul, so it raises here, naming the offending
+    ``neighbor_id``s, instead of failing later inside the kernel."""
+    import pyarrow.compute as pc
+
+    lens = np.asarray(pc.fill_null(pc.list_value_length(cv), -1))
+    bad = np.flatnonzero(lens != d)
+    if bad.size:
+        raise ValueError(
+            f"dense top-k kernel: {bad.size} corpus row(s) have a null or "
+            f"ragged cv (expected {d} values); neighbor_id "
+            f"{nids[bad][:10].tolist()}"
+        )
+    return np.asarray(cv.flatten(), dtype=np.float64).reshape(len(nids), d)
 
 
 def _dense_topk_candidates(
-    corpus: DataFrame,
-    queries_rows: list,
-    k: int,
-    by_label: bool = False,
+    corpus: DataFrame, queries_rows: list, k: int
 ) -> DataFrame:
     """Per-batch tie-exact top-k candidates of the dense query×corpus scan.
 
-    *corpus* carries (neighbor_id, cv, cn[, clabel]); *queries_rows* are
-    collected Rows (query_id, qv, qn[, qlabel]) — bounded by the
-    brute-force gate / the recall sample, the same bounded-model-collect
-    class as the IVF centroids. Emits, per Arrow batch and per query,
-    every candidate that can reach the global top-k under
-    (cosine DESC NULLS LAST, neighbor_id ASC):
+    *corpus* carries (neighbor_id, cv, cn); *queries_rows* are collected
+    Rows (query_id, qv, qn) — bounded by the brute-force gate / the recall
+    sample, the same bounded-model-collect class as the IVF centroids.
+    Emits, per Arrow batch and per query, every candidate that can reach
+    the global top-k under (cosine DESC NULLS LAST, neighbor_id ASC):
 
     * all rows with cosine ≥ the batch's k-th largest finite cosine
       (boundary ties INCLUDED, so the global tie-break by neighbor_id
@@ -143,34 +145,16 @@ def _dense_topk_candidates(
     """
     import pyarrow as pa
 
-    if by_label:
-        by_lab: dict = {}
-        for r in queries_rows:
-            by_lab.setdefault(r["qlabel"], [[], [], []])
-            g = by_lab[r["qlabel"]]
-            g[0].append(r["query_id"])
-            g[1].append([float(x) for x in r["qv"]])
-            g[2].append(float(r["qn"]))
-        groups = {
-            lab: (
-                np.asarray(g[0], dtype=np.int64),
-                np.asarray(g[1], dtype=np.float64),
-                np.asarray(g[2], dtype=np.float64),
-            )
-            for lab, g in by_lab.items()
-        }
-    else:
-        groups = {
-            None: (
-                np.asarray([r["query_id"] for r in queries_rows], np.int64),
-                np.asarray(
-                    [[float(x) for x in r["qv"]] for r in queries_rows],
-                    np.float64,
-                ),
-                np.asarray([float(r["qn"]) for r in queries_rows], np.float64),
-            )
-        }
-    bc = corpus.sparkSession.sparkContext.broadcast(groups)
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (
+            np.asarray([r["query_id"] for r in queries_rows], np.int64),
+            np.asarray(
+                [[float(x) for x in r["qv"]] for r in queries_rows],
+                np.float64,
+            ),
+            np.asarray([float(r["qn"]) for r in queries_rows], np.float64),
+        )
+    )
 
     out_schema = "query_id long, neighbor_id long, cosine double"
     pa_schema = pa.schema(
@@ -182,83 +166,56 @@ def _dense_topk_candidates(
     )
 
     def score(batches):
-        grp = bc.value
+        qids, Qm, qns = bc.value
+        if not len(qids):
+            return
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            m = batch.num_rows
+            if m == 0:
                 continue
             nids = np.asarray(batch.column("neighbor_id"), dtype=np.int64)
-            C = _np_from_list_array(batch.column("cv"), n)
-            if C is None:  # ragged/null rows: exact per-row fallback
-                C = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in
-                     batch.column("cv").to_pylist()]
-                )
+            C = _dense_matrix(batch.column("cv"), nids, Qm.shape[1])
             cns = np.asarray(batch.column("cn"), dtype=np.float64)
-            labs = (
-                np.asarray(batch.column("clabel"), dtype=np.int64)
-                if by_label
-                else None
-            )
+            # local row index per neighbor id (self-pair exclusion)
             nid_pos = {int(v): i for i, v in enumerate(nids)}
             oq, on, oc, onull = [], [], [], []
-            for lab, (qids, Qm, qns) in grp.items():
-                if by_label:
-                    rows = np.flatnonzero(labs == lab)
-                    if rows.size == 0:
-                        continue
-                    Cs, cn_s, nid_s = C[rows], cns[rows], nids[rows]
+            qchunk = max(64, min(1024, 8_000_000 // m))
+            for s in range(0, len(qids), qchunk):
+                qid_c = qids[s : s + qchunk]
+                dots = C @ Qm[s : s + qchunk].T
+                denom = np.outer(cns, qns[s : s + qchunk])
+                ok = denom != 0
+                filled = np.full_like(dots, -np.inf)
+                np.divide(dots, denom, out=filled, where=ok)
+                # self-pairs: excluded outright (≠ null)
+                excl = np.zeros_like(ok)
+                for j, qid in enumerate(qid_c):
+                    i = nid_pos.get(int(qid))
+                    if i is not None:
+                        filled[i, j] = -np.inf
+                        excl[i, j] = True
+                if m > k:
+                    kth = np.partition(filled, m - k, axis=0)[m - k]
+                    emit = (filled >= kth) & (filled > -np.inf)
                 else:
-                    Cs, cn_s, nid_s = C, cns, nids
-                m = Cs.shape[0]
-                # local row index per neighbor id (self-pair exclusion)
-                sub_pos = (
-                    {int(v): i for i, v in enumerate(nid_s)}
-                    if by_label
-                    else nid_pos
-                )
-                qchunk = max(64, min(1024, 8_000_000 // max(1, m)))
-                for s in range(0, len(qids), qchunk):
-                    qid_c = qids[s : s + qchunk]
-                    dots = Cs @ Qm[s : s + qchunk].T
-                    denom = np.outer(cn_s, qns[s : s + qchunk])
-                    ok = denom != 0
-                    filled = np.full_like(dots, -np.inf)
-                    np.divide(dots, denom, out=filled, where=ok)
-                    # self-pairs: excluded outright (≠ null)
-                    excl = np.zeros_like(ok)
-                    for j, qid in enumerate(qid_c):
-                        i = sub_pos.get(int(qid))
-                        if i is not None:
-                            filled[i, j] = -np.inf
-                            excl[i, j] = True
-                    if m > k:
-                        kth = np.partition(filled, m - k, axis=0)[m - k]
-                        emit = (filled >= kth) & (filled > -np.inf)
-                    else:
-                        emit = filled > -np.inf
-                    rr, cc = np.nonzero(emit)
-                    oq.append(qid_c[cc])
-                    on.append(nid_s[rr])
-                    oc.append(filled[rr, cc])
-                    # null completion: only where finite candidates < k
-                    n_fin = emit.sum(axis=0)
-                    for j in np.flatnonzero(n_fin < k):
-                        nulls = np.flatnonzero(~ok[:, j] & ~excl[:, j])
-                        if nulls.size == 0:
-                            continue
-                        keep = nulls[np.argsort(nid_s[nulls])][:k]
-                        onull.append(
-                            (
-                                np.full(keep.size, qid_c[j], np.int64),
-                                nid_s[keep],
-                            )
-                        )
-            if not oq and not onull:
-                continue
-            q_arr = np.concatenate(oq) if oq else np.empty(0, np.int64)
-            n_arr = np.concatenate(on) if on else np.empty(0, np.int64)
-            c_arr = np.concatenate(oc) if oc else np.empty(0, np.float64)
+                    emit = filled > -np.inf
+                rr, cc = np.nonzero(emit)
+                oq.append(qid_c[cc])
+                on.append(nids[rr])
+                oc.append(filled[rr, cc])
+                # null completion: only where finite candidates < k
+                n_fin = emit.sum(axis=0)
+                for j in np.flatnonzero(n_fin < k):
+                    nulls = np.flatnonzero(~ok[:, j] & ~excl[:, j])
+                    if nulls.size == 0:
+                        continue
+                    keep = nulls[np.argsort(nids[nulls])][:k]
+                    onull.append(
+                        (np.full(keep.size, qid_c[j], np.int64), nids[keep])
+                    )
+            q_arr = np.concatenate(oq)
+            n_arr = np.concatenate(on)
+            c_arr = np.concatenate(oc)
             if onull:
                 q_arr = np.concatenate([q_arr] + [x[0] for x in onull])
                 n_arr = np.concatenate([n_arr] + [x[1] for x in onull])
@@ -398,7 +355,7 @@ def topk_per_query(
     )
 
 
-@register("similarity_bruteforce_topk", defer=True, oracle=_SQL_BRUTE)
+@register("similarity_bruteforce_topk", oracle=_SQL_BRUTE)
 def similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense exact top-k baseline via the matmul kernel.
 
@@ -454,7 +411,7 @@ FROM (
 """
 
 
-@register("similarity_ivf_topk", defer=True, oracle=_SQL_IVF)
+@register("similarity_ivf_topk", oracle=_SQL_IVF)
 def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: probe only the query's coarse partition (label).
 
@@ -1250,8 +1207,8 @@ def srp_candidate_pairs(
     ``use_arrow=False`` builds the identical relation from pure JVM
     expressions (``srp_bucket`` + the HOF cosine fold) — required when the
     relation feeds iterative persist/checkpoint loops, where Arrow-UDF
-    stages have wedged python workers (see ``connected_components``); bucket
-    and cosine parity between the two forms is pytest-pinned.
+    stages have wedged python workers (see ``connected_components_jump``);
+    bucket and cosine parity between the two forms is pytest-pinned.
     """
     q = _quantized(spark, sf_dir)
     if use_arrow:
@@ -2747,8 +2704,8 @@ def _semdedup_prune_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # when the returned pair DataFrame executes, and the returned plan
     # must not depend on a cache the caller can't see. One-shot eager
     # materialization of a single Arrow stage — NOT the iterative
-    # persist/checkpoint-loop shape connected_components documents as the
-    # python-worker wedge hazard (that rule still routes the CC family
+    # persist/checkpoint-loop shape connected_components_jump documents as
+    # the python-worker wedge hazard (that rule still routes the CC family
     # through staged parquet).
     q = _quantized(spark, sf_dir).select(
         "vec_id",

@@ -270,7 +270,7 @@ FROM p
 """
 
 
-@register("events_funnel_user_conversion", defer=True, oracle=_SQL_FUNNEL)
+@register("events_funnel_user_conversion", oracle=_SQL_FUNNEL)
 def events_funnel_user_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase funnel per user: first click, first purchase after it.
 
@@ -326,7 +326,7 @@ GROUP BY 1, 2
 """
 
 
-@register("events_hour_cohort_retention", defer=True, oracle=_SQL_COHORT)
+@register("events_hour_cohort_retention", oracle=_SQL_COHORT)
 def events_hour_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly cohort retention: users active N hours after their first hour.
 

@@ -52,7 +52,7 @@ FROM raw
 """
 
 
-@register("prim_to_number_cleaning", defer=True, oracle=_SQL_TO_NUMBER)
+@register("prim_to_number_cleaning", oracle=_SQL_TO_NUMBER)
 def prim_to_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey") % 100
@@ -90,7 +90,7 @@ FROM raw GROUP BY 1
 """
 
 
-@register("prim_parse_month", defer=True, oracle=_SQL_PARSE_MONTH)
+@register("prim_parse_month", oracle=_SQL_PARSE_MONTH)
 def prim_parse_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey") % 5
@@ -124,7 +124,7 @@ GROUP BY 1
 """
 
 
-@register("prim_filter_predicates", defer=True, oracle=_SQL_PREDICATES)
+@register("prim_filter_predicates", oracle=_SQL_PREDICATES)
 def prim_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return (
@@ -149,7 +149,7 @@ FROM orders GROUP BY 1
 """
 
 
-@register("prim_pivot_status", defer=True, oracle=_SQL_PIVOT)
+@register("prim_pivot_status", oracle=_SQL_PIVOT)
 def prim_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").cast("string").alias("year"), "o_orderstatus"
@@ -238,7 +238,7 @@ FROM u GROUP BY store_id
 """
 
 
-@register("prim_union_by_name", defer=True, oracle=_SQL_UNION)
+@register("prim_union_by_name", oracle=_SQL_UNION)
 def prim_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.year("o_orderdate") == int(PREV_YEAR)).select(
@@ -265,7 +265,7 @@ FROM orders GROUP BY 1
 """
 
 
-@register("prim_distinct_count", defer=True, oracle=_SQL_DISTINCT)
+@register("prim_distinct_count", oracle=_SQL_DISTINCT)
 def prim_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return o.groupBy(F.year("o_orderdate").cast("string").alias("year")).agg(
@@ -286,7 +286,7 @@ SELECT 'customer' AS source, COUNT(*) AS n FROM customer WHERE CAST(c_custkey AS
 """
 
 
-@register("prim_presence_check", defer=True, oracle=_SQL_PRESENCE)
+@register("prim_presence_check", oracle=_SQL_PRESENCE)
 def prim_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-availability pre-check for one key across sources.
 
@@ -357,7 +357,7 @@ FROM r
 """
 
 
-@register("prim_fmt_pct", defer=True, oracle=_SQL_FMT_PCT)
+@register("prim_fmt_pct", oracle=_SQL_FMT_PCT)
 def prim_fmt_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 percent formatting over real ratios, plus the NULL -> '' branch.
 

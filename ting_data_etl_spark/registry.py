@@ -21,19 +21,9 @@ OracleSpec = str | Callable[[], str]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, OracleSpec] = {}
 
-# Rotation queue: queries marked ``defer=True`` at decoration time land here
-# and only enter QUERIES when ``flush_deferred()`` runs at the END of
-# ``load_all()``. This lets a module keep its queries defined (and tested) in
-# one place while rotating stable, repeatedly-green entries OUT of the
-# driver's finite first-N correctness budget to make room for recently
-# changed families — without moving code between modules.
-_DEFERRED: list[tuple[str, "OracleSpec | None", QueryFn]] = []
-
 
 def register(
-    name: str,
-    oracle: OracleSpec | None = None,
-    defer: bool = False,
+    name: str, oracle: OracleSpec | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query under *name* with an optional SQL oracle.
 
@@ -42,34 +32,18 @@ def register(
     later-registering modules) from import time to ``resolve_oracles()``
     time, keeping module import pure and registration order intact.
 
-    *defer* pushes the query to the back of the registration order (after
-    every non-deferred family) regardless of module import position — used
-    to rotate multi-round-green queries out of the driver's budget window.
-
     Queries without an oracle get the driver's weaker rows-only check — used
     only for genuinely non-SQL-expressible ops (hash families DuckDB lacks,
     stateful streaming).
     """
 
     def deco(fn: QueryFn) -> QueryFn:
-        if defer:
-            _DEFERRED.append((name, oracle, fn))
-        else:
-            QUERIES[name] = fn
-            if oracle is not None:
-                ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def flush_deferred() -> None:
-    """Append every ``defer=True`` registration, in decoration order."""
-    for name, oracle, fn in _DEFERRED:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-    _DEFERRED.clear()
+        return fn
+
+    return deco
 
 
 def resolve_oracles() -> dict[str, str]:
@@ -80,90 +54,64 @@ def resolve_oracles() -> dict[str, str]:
     return out
 
 
-def load_all() -> None:
-    """Import every module that registers queries, then apply the rotation plan.
-
-    ORDER IS THE CONTRACT: the correctness driver checks registered queries
-    in registration order under a finite (~50) budget. Since round 6 the
-    order is DERIVED, not hand-maintained: ``tools/update_rotation.py``
-    computes ``_rotation_plan.json`` from the committed CORRECTNESS_r*.json
-    history (due queries — new, failed, stale beyond MAX_ROW_AGE rounds, or
-    with a changed implementing module — first; stable green queries cycle
-    behind them), and :func:`_apply_rotation_plan` reorders the registry to
-    match. The invariants are pytest-enforced (``tests/test_rotation.py``).
-    The static ``defer=True`` flags below remain only as the plan-less
-    fallback ordering; the plan overrides them. Module import order is
-    transitive (an import that pulls in another registering module registers
-    that module's queries at that point), so modules below avoid top-level
-    imports of later families.
-    """
+#: Every module that registers queries, in registration order. The SURVEY
+#: §2 spec surface comes first: the flagship, the six reference jobs, the
+#: primitives, the sinks and the CSV end-to-end paths (every name prefixed
+#: ``flagship``, ``job_``, ``prim_``, ``sink_``, ``e2e_`` or ``csv_``).
+MODULES = (
     # --- SURVEY §2 spec surface -------------------------------------------
-    import ting_data_etl_spark.plans.flagship  # noqa: F401
-    import ting_data_etl_spark.plans.jobs  # noqa: F401
-    import ting_data_etl_spark.plans.primitives  # noqa: F401
-    import ting_data_etl_spark.operators.verify  # noqa: F401
-    import ting_data_etl_spark.streaming.windows  # noqa: F401
-    import ting_data_etl_spark.streaming.stateful  # noqa: F401
-    import ting_data_etl_spark.streaming.joins  # noqa: F401
-    import ting_data_etl_spark.streaming.batch_windows  # noqa: F401
-    # --- changed this round: events-loader dependents ----------------------
-    import ting_data_etl_spark.operators.temporal  # noqa: F401
-    import ting_data_etl_spark.operators.olap  # noqa: F401
-    import ting_data_etl_spark.operators.quality  # noqa: F401
-    # --- §2 I/O paths ------------------------------------------------------
-    import ting_data_etl_spark.plans.csv_e2e  # noqa: F401
-    import ting_data_etl_spark.sources.jsonl  # noqa: F401
-    # --- recently changed extension families --------------------------------
-    import ting_data_etl_spark.operators.sampling  # noqa: F401
-    import ting_data_etl_spark.operators.similarity  # noqa: F401
-    import ting_data_etl_spark.operators.ensemble  # noqa: F401
-    # --- NEW this round: curation suite + ORC round-trip --------------------
-    import ting_data_etl_spark.operators.curation  # noqa: F401
-    # --- NEW r11: standing-state incremental selection ----------------------
-    import ting_data_etl_spark.operators.incremental  # noqa: F401
-    import ting_data_etl_spark.sources.orc  # noqa: F401
-    import ting_data_etl_spark.sources.textfile  # noqa: F401
-    # --- NEW this round: window/rollup/skew/SCD2 additions land via their
-    # family modules; cdc and skew move up because they gained new queries
-    # (temporal/olap are already registered above) -------------------------
-    import ting_data_etl_spark.operators.cdc  # noqa: F401
-    import ting_data_etl_spark.operators.skew  # noqa: F401
-    # --- unchanged extension families (green latest-checked rows) ----------
-    import ting_data_etl_spark.operators.dedup  # noqa: F401
-    import ting_data_etl_spark.operators.text_queries  # noqa: F401
-    import ting_data_etl_spark.operators.pii  # noqa: F401
-    import ting_data_etl_spark.operators.multimodal  # noqa: F401
-    import ting_data_etl_spark.operators.bucketed  # noqa: F401
-    import ting_data_etl_spark.operators.layout  # noqa: F401
-    import ting_data_etl_spark.operators.maintenance  # noqa: F401
-    # --- rotated-out stable queries (defer=True) ----------------------------
-    flush_deferred()
-    # --- derived driver-window order (overrides the static flags) -----------
-    _apply_rotation_plan()
+    "ting_data_etl_spark.plans.flagship",
+    "ting_data_etl_spark.plans.jobs",
+    "ting_data_etl_spark.plans.primitives",
+    "ting_data_etl_spark.operators.verify",
+    "ting_data_etl_spark.plans.csv_e2e",
+    # --- streaming and event-time families ----------------------------------
+    "ting_data_etl_spark.streaming.windows",
+    "ting_data_etl_spark.streaming.stateful",
+    "ting_data_etl_spark.streaming.joins",
+    "ting_data_etl_spark.streaming.batch_windows",
+    "ting_data_etl_spark.operators.temporal",
+    "ting_data_etl_spark.operators.olap",
+    "ting_data_etl_spark.operators.quality",
+    # --- I/O round-trips ----------------------------------------------------
+    "ting_data_etl_spark.sources.jsonl",
+    "ting_data_etl_spark.sources.orc",
+    "ting_data_etl_spark.sources.textfile",
+    # --- extension families -------------------------------------------------
+    "ting_data_etl_spark.operators.sampling",
+    "ting_data_etl_spark.operators.similarity",
+    "ting_data_etl_spark.operators.ensemble",
+    "ting_data_etl_spark.operators.curation",
+    "ting_data_etl_spark.operators.incremental",
+    "ting_data_etl_spark.operators.cdc",
+    "ting_data_etl_spark.operators.skew",
+    "ting_data_etl_spark.operators.dedup",
+    "ting_data_etl_spark.operators.text_queries",
+    "ting_data_etl_spark.operators.pii",
+    "ting_data_etl_spark.operators.multimodal",
+    "ting_data_etl_spark.operators.bucketed",
+    "ting_data_etl_spark.operators.layout",
+    "ting_data_etl_spark.operators.maintenance",
+)
 
 
-def _apply_rotation_plan() -> None:
-    """Reorder QUERIES to the derived rotation plan's order.
+def load_all() -> None:
+    """Import every module in :data:`MODULES` and order ``QUERIES`` by it.
 
-    Names in the plan come first, in plan order; queries registered but
-    absent from the plan (added since the last regeneration) keep their
-    decoration order at the tail — and ``tests/test_rotation.py`` fails
-    until ``tools/update_rotation.py`` is re-run to place them. Disabled
-    via TING_ROTATION_PLAN_DISABLE so the regeneration tool (and any
-    debugging session) can see raw decoration order.
+    ORDER IS THE CONTRACT: a budget-limited correctness check takes a
+    prefix of ``QUERIES``, so the spec surface must lead it
+    (pytest-pinned in ``tests/test_registry.py``). Registration happens at
+    import time, and an import can pull in another registering module
+    early, or a caller can import a family before calling this. So the
+    order comes from the module list, not from import order: queries sort
+    by their module's position in :data:`MODULES`, and keep decoration
+    order within a module.
     """
-    import os
+    import importlib
 
-    if os.environ.get("TING_ROTATION_PLAN_DISABLE"):
-        return
-    from ting_data_etl_spark.rotation import load_plan
-
-    plan = load_plan()
-    if not plan:
-        return
-    ordered = [n for n in plan.get("order", []) if n in QUERIES]
-    ordered_set = set(ordered)
-    tail = [n for n in QUERIES if n not in ordered_set]
-    reordered = {n: QUERIES[n] for n in ordered + tail}
+    for name in MODULES:
+        importlib.import_module(name)
+    rank = {name: i for i, name in enumerate(MODULES)}
+    ordered = sorted(QUERIES.items(), key=lambda kv: rank[kv[1].__module__])
     QUERIES.clear()
-    QUERIES.update(reordered)
+    QUERIES.update(ordered)

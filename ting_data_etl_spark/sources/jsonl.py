@@ -70,7 +70,7 @@ GROUP BY source
 """
 
 
-@register("jsonl_roundtrip_profile", defer=True, oracle=_SQL_JSONL_PROFILE)
+@register("jsonl_roundtrip_profile", oracle=_SQL_JSONL_PROFILE)
 def jsonl_roundtrip_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write documents → JSONL shards → read back → checksum per source.
 

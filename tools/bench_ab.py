@@ -36,7 +36,7 @@ def run_bench(worktree: str) -> dict:
         stdout=subprocess.DEVNULL,
         stderr=subprocess.DEVNULL,
     )
-    # bench.py writes BENCH_LOCAL_r{NN}.json (round from the rotation plan)
+    # bench.py writes BENCH_LOCAL.json (older revisions: BENCH_LOCAL_r{NN})
     cands = [
         f
         for f in os.listdir(worktree)

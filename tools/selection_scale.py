@@ -3,7 +3,7 @@ dedup_semdedup_prune, sample_dsir_importance, corpus_epoch_order,
 corpus_budget_head.
 
 Per scale (x10 / x100 of the sf0.1 shape, generated by tools/scale_corpus.py
-into /tmp/scale_corpus — shared with tools/text_scale.py), records each
+into /tmp/scale_corpus), records each
 operator's funnel:
 
   semdedup:  max cluster size -> within-cluster candidate pairs -> pruned
