@@ -20,7 +20,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from ting_data_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="ting-data-etl-bench")
+    spark = get_spark(app_name="ting-data-etl-bench", long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
 
     # Every registered query, alphabetized — complete perf transparency.

@@ -15,8 +15,11 @@ module constant the expression reads, so a retune (tests monkeypatch
 SHINGLE_N, PERMS, the gopher gates) mints a fresh entry instead of
 serving a stale tree. Entries live for the PROCESS — the py4j gateway
 JVM outlives SparkSession restarts in-process, and an unresolved
-expression holds no session state. The cache is bounded FIFO like the
-relation memo.
+expression holds no session state. It does hold py4j handles into that
+JVM, so every key also folds the gateway's identity
+(:func:`_gateway_token`): a relaunched JVM misses and builds new Columns
+instead of being served handles into the dead one. The cache is bounded
+FIFO like the relation memo.
 """
 
 from __future__ import annotations
@@ -29,6 +32,20 @@ _LOCK = threading.Lock()
 MAX_ENTRIES = 64
 
 
+def _gateway_token() -> tuple | None:
+    """Identity of the py4j gateway the built Columns point into.
+
+    The object id alone could be reused after a dead gateway is collected,
+    so the port the JVM's gateway server listens on rides along.
+    """
+    from pyspark import SparkContext
+
+    gw = SparkContext._gateway
+    if gw is None:
+        return None
+    return (id(gw), gw.gateway_parameters.port)
+
+
 def cached_exprs(key: tuple, build: Callable[[], object]) -> object:
     """Return the cached expression bundle under *key*, building once.
 
@@ -36,6 +53,7 @@ def cached_exprs(key: tuple, build: Callable[[], object]) -> object:
     bundle of them; the caller must treat the result as read-only (the
     same objects are shared by every later caller).
     """
+    key = (_gateway_token(), *key)
     with _LOCK:
         got = _CACHE.get(key)
     if got is not None:

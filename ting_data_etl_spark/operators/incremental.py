@@ -1534,6 +1534,72 @@ LEFT JOIN hits h ON d.doc_id = h.doc_id
 """
 
 
+# OPTIMIZATION r16 (guide §2.1/§5, VERDICT r15 #1 — streaming driver gap):
+# the arrival gate's size gate needs ONLY the batch row count, and the gate
+# staged the stream's files itself — their parquet footers carry exact row
+# counts. Reading footers once driver-side replaces a full count() action
+# (plan + schedule + scan) per trigger. The counts are keyed by file path
+# and looked up through the files the stream's source logged for the batch,
+# so the mapping does not rest on the replay order (files with tied mtimes
+# replay in listing order, not name order). A miss only picks the other
+# PERFORMANCE path (the In-prune filters the index to a superset of the
+# batch's bands either way), so the fallback count() is for robustness,
+# not correctness.
+def _staged_file_rows(stage_dir: str) -> dict[str, int]:
+    """Footer row count of every parquet file in *stage_dir*, by real path."""
+    try:
+        import pyarrow.parquet as pq
+
+        return {
+            os.path.realpath(p): pq.ParquetFile(p).metadata.num_rows
+            for p in (
+                os.path.join(stage_dir, f)
+                for f in os.listdir(stage_dir)
+                if f.endswith(".parquet")
+            )
+        }
+    except (ImportError, OSError, ValueError):
+        return {}
+
+
+def _batch_source_files(checkpoint: str, batch_id: int) -> list[str]:
+    """The files a fresh one-source file stream logged for micro-batch
+    *batch_id*, as local paths ([] when the log entry cannot be read).
+
+    ``foreachBatch`` hands the batch over as an RDD-backed plan, so its
+    ``DataFrame.inputFiles()`` is empty; the file source's own log,
+    ``<checkpoint>/sources/0/<id>`` (a ``v1`` line, then one JSON entry per
+    file), names them. Its ids count the source's offsets, which match the
+    micro-batch ids when every batch reads one offset from a new checkpoint.
+    """
+    import json
+    from urllib.parse import unquote, urlparse
+
+    try:
+        log = os.path.join(checkpoint, "sources", "0", str(batch_id))
+        with open(log) as f:
+            version, *entries = f.read().splitlines()
+        if version != "v1":
+            return []
+        return [
+            os.path.realpath(unquote(urlparse(json.loads(e)["path"]).path))
+            for e in entries
+            if e
+        ]
+    except (OSError, ValueError, KeyError):
+        return []
+
+
+def _batch_rows(
+    batch_df: DataFrame, files: list[str], rows_by_file: dict[str, int]
+) -> int:
+    """Rows of a micro-batch: the footer count when the batch read exactly
+    one known file, else ``count()``."""
+    if len(files) == 1 and files[0] in rows_by_file:
+        return rows_by_file[files[0]]
+    return batch_df.count()
+
+
 @register("streaming_incremental_arrival_gate", oracle=_sql_arrival_gate)
 def streaming_incremental_arrival_gate(
     spark: SparkSession, sf_dir: str
@@ -1593,32 +1659,8 @@ def streaming_incremental_arrival_gate(
     base = new_run_dir(os.path.join(tempfile.gettempdir(), "ting_arrival_gate"))
     os.makedirs(base, exist_ok=True)  # per-batch subdirs land under it
 
-    # OPTIMIZATION r16 (guide §2.1/§5, VERDICT r15 #1 — streaming driver
-    # gap): the size gate below needs ONLY the batch row count, and the
-    # gate staged the stream's files itself — their parquet footers carry
-    # exact row counts, and with maxFilesPerTrigger=1 over ascending
-    # distinct mtimes (the property the stage publishes and
-    # test_runs_as_multiple_microbatches pins) batch_id i replays the
-    # i-th file. Reading footers once driver-side replaces a full count()
-    # action (plan + schedule + scan) per trigger. A mapping miss only
-    # picks the other PERFORMANCE path (the In-prune filters the index to
-    # a superset of the batch's bands either way) — results are identical
-    # by construction, so the fallback count() is for robustness, not
-    # correctness.
-    def _staged_batch_rows(stage_dir: str) -> list[int]:
-        try:
-            import pyarrow.parquet as pq
-
-            return [
-                pq.ParquetFile(os.path.join(stage_dir, p)).metadata.num_rows
-                for p in sorted(
-                    f for f in os.listdir(stage_dir) if f.endswith(".parquet")
-                )
-            ]
-        except Exception:
-            return []
-
-    rows_by_batch = _staged_batch_rows(staged)
+    rows_by_file = _staged_file_rows(staged)
+    checkpoint = os.path.join(base, "_checkpoint")
 
     # built ONCE per gate invocation, reused across triggers: unresolved
     # Columns are DataFrame-independent (OPTIMIZATION r16, same py4j
@@ -1658,11 +1700,8 @@ def streaming_incremental_arrival_gate(
             # ~every band; for them the no-shuffle bucketed join is the win
             # and the extra signature pass would cost more than it prunes.
             idx = standing_capped
-            n_rows = (
-                rows_by_batch[batch_id]
-                if batch_id < len(rows_by_batch)
-                else batch_df.count()
-            )
+            files = _batch_source_files(checkpoint, batch_id)
+            n_rows = _batch_rows(batch_df, files, rows_by_file)
             # OPTIMIZATION r16 (guide §2.1): for a SMALL drop, AQE fragments
             # the per-trigger write into ~10 one-task query-stage jobs, each
             # paying ~0.1 s of driver re-planning — on a plan whose joins are
@@ -1719,6 +1758,7 @@ def streaming_incremental_arrival_gate(
     try:
         q = (
             stream.writeStream.foreachBatch(gate)
+            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )

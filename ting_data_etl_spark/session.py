@@ -10,6 +10,17 @@ ones we would ship to a 1000-executor cluster, applied identically in
 * Arrow enabled so the few Pandas-UDF operators transfer columnar batches.
 * ``shuffle.partitions`` sized for the local harness; on a real cluster AQE
   coalesces from a deliberately-high initial number.
+* The driver JVM's JIT profile follows the session's length
+  (:func:`driver_java_options`): a batch run (one pipeline per process,
+  the paper's shape) compiles with C1 only; ``get_spark(long_lived=True)``
+  keeps full tiered C2 for harnesses that run many queries in one session.
+
+Environment knobs, all read at call time: ``SPARK_GRAFT_CPUS`` (local core
+count), ``SPARK_GRAFT_DRIVER_MEM`` (driver heap),
+``SPARK_GRAFT_DRIVER_JAVA_OPTS`` (appended last to the driver JVM flags, so
+it overrides the defaults) and ``SPARK_GRAFT_SHUFFLE_PARTITIONS``. JVM
+flags only act when ``get_spark`` launches the JVM: a call that reuses a
+live session keeps that JVM's heap and JIT profile.
 """
 
 from __future__ import annotations
@@ -56,13 +67,57 @@ def _default_driver_mem() -> str:
     return f"{max(4, min(24, int(total_gb // 2)))}g"
 
 
+def driver_java_options(long_lived: bool = False) -> str:
+    """The driver JVM's ``spark.driver.extraJavaOptions``, in flag order.
+
+    For a repeated ``-XX`` flag the JVM keeps the last occurrence, so
+    ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` comes last and overrides both
+    defaults (e.g. ``-XX:TieredStopAtLevel=4`` after the batch profile's
+    ``=1`` runs with 4).
+    """
+    # The periodic cleaner calls System.gc(): on JDK 17's default G1
+    # that is a FULL stop-the-world collection — multi-second on a 16g
+    # heap full of checkpoint/broadcast blocks, charged to whichever
+    # query is in flight (the r15 bench measured isolated-fast queries
+    # at +2-8s mid-pass: corpus_budget_head 1.9s isolated vs 10.3s in
+    # the warm pass). ExplicitGCInvokesConcurrent turns the explicit
+    # call into a concurrent G1 cycle; weak refs (what the
+    # ContextCleaner actually needs collected) are still processed at
+    # the brief remark pause. Same flag a long-running driver gets in
+    # production.
+    opts = ["-XX:+ExplicitGCInvokesConcurrent"]
+    # JIT profile by session length. A fresh batch run (one pipeline per
+    # process, as in perfbench) ends before C2's compilations pay back: on
+    # a 4-core host the C1/C2 compiler threads used 55-60 of the 109-115
+    # CPU-seconds of a fresh store_pipeline body, and bought no wall time.
+    # C1-only compilation (TieredStopAtLevel=1) won all ten alternating
+    # pairs per workload: median cpu_s 106.9→58.4 s for that body and
+    # 102.1→52.3 s for a cold corpus build, with median set-up time 1-2 s
+    # lower. A long session is the other way round: one bench.py run at
+    # sf0.1 (161 queries, cold then warm pass) was 53% slower warm with
+    # C1 only (211.9→324.7 s), so harnesses that run many queries or
+    # large inputs in one session pass long_lived=True and keep full
+    # tiered C2. The flag only acts at JVM launch: a reused session keeps
+    # the profile its JVM started with.
+    if not long_lived:
+        opts.append("-XX:TieredStopAtLevel=1")
+    opts.append(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""))
+    return " ".join(opts).strip()
+
+
 def get_spark(
     app_name: str = "ting-data-etl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
+    long_lived: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's tuned defaults.
+
+    ``long_lived=True`` keeps the driver JVM's full tiered (C2) JIT, for
+    sessions that run many queries or large inputs; the default is the
+    C1-only batch profile (see :func:`driver_java_options`). It only acts
+    when this call launches the JVM.
 
     ``shuffle_partitions`` defaults from ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
     read at CALL time (an import-time read frozen into a def-time default
@@ -100,26 +155,8 @@ def get_spark(
         # long-running drivers, not a local-only trick (static conf:
         # must be set before the context starts, so it rides the builder).
         .config("spark.cleaner.periodicGC.interval", "5min")
-        # The periodic cleaner calls System.gc(): on JDK 17's default G1
-        # that is a FULL stop-the-world collection — multi-second on a 16g
-        # heap full of checkpoint/broadcast blocks, charged to whichever
-        # query is in flight (the r15 bench measured isolated-fast queries
-        # at +2-8s mid-pass: corpus_budget_head 1.9s isolated vs 10.3s in
-        # the warm pass). ExplicitGCInvokesConcurrent turns the explicit
-        # call into a concurrent G1 cycle; weak refs (what the
-        # ContextCleaner actually needs collected) are still processed at
-        # the brief remark pause. Same flag a long-running driver gets in
-        # production. SPARK_GRAFT_DRIVER_JAVA_OPTS comes LAST: for
-        # duplicated JVM boolean flags the last occurrence wins, so the
-        # env var can genuinely override the default (ADVICE r15 — the
-        # old order appended the default after the user's opts, silently
-        # ignoring e.g. -XX:-ExplicitGCInvokesConcurrent).
         .config(
-            "spark.driver.extraJavaOptions",
-            (
-                "-XX:+ExplicitGCInvokesConcurrent "
-                + os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")
-            ).strip(),
+            "spark.driver.extraJavaOptions", driver_java_options(long_lived)
         )
         .config("spark.ui.enabled", "false")
         # keep \r progress bars out of sweep logs (they overwrite PASS

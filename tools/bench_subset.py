@@ -37,7 +37,7 @@ def main() -> None:
     if missing:
         raise SystemExit(f"unknown queries: {missing}")
 
-    spark = get_spark(app_name="ting-data-etl-bench-subset")
+    spark = get_spark(app_name="ting-data-etl-bench-subset", long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(name: str) -> float:

@@ -67,7 +67,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from ting_data_etl_spark.session import get_spark
 
-    spark = get_spark(shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8, long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -141,7 +141,7 @@ def main() -> None:
     from ting_data_etl_spark.sinks.fanout import write_fanout
     from ting_data_etl_spark.sinks.single_file import write_per_group_csv
 
-    spark = get_spark(app_name="fanout-stress")
+    spark = get_spark(app_name="fanout-stress", long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
     shutil.rmtree(OUT_ROOT, ignore_errors=True)
 

@@ -305,6 +305,6 @@ if __name__ == "__main__":
 
     out = sys.argv[1]
     scale = float(sys.argv[2])
-    spark = get_spark(app_name="scale-corpus-gen")
+    spark = get_spark(app_name="scale-corpus-gen", long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
     print(generate(spark, out, scale))

@@ -302,7 +302,7 @@ def main() -> None:
 
     from ting_data_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="scale-stress")
+    spark = get_spark(app_name="scale-stress", long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
 
     report = {"scales": []}
