@@ -12,26 +12,16 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# The suite is one long session of ~620 tests, the shape where C2 pays
-# back: on a 4-core host a full run took 1584 s with the C1-only batch
-# default and 1148 s with full tiered C2.
-LONG_LIVED = True
-
 
 @pytest.fixture(scope="session")
-def spark_long_lived() -> bool:
-    """The JIT profile the suite's session asks for (session.get_spark)."""
-    return LONG_LIVED
-
-
-@pytest.fixture(scope="session")
-def spark(spark_long_lived):
+def spark():
     from ting_data_etl_spark.session import get_spark
 
+    # The suite is one long session of ~620 tests, the shape where C2 pays
+    # back: on a 4-core host a full run took 1584 s with the C1-only batch
+    # default and 1148 s with full tiered C2.
     s = get_spark(
-        app_name="ting-data-etl-tests",
-        shuffle_partitions=4,
-        long_lived=spark_long_lived,
+        app_name="ting-data-etl-tests", shuffle_partitions=4, long_lived=True
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s

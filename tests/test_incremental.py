@@ -251,7 +251,10 @@ def test_streaming_arrival_gate_equals_batch_composition(spark, sf_dir):
     """The union over micro-batches == the one-shot composition of the two
     registered batch operators (probe + gate) — the splittability property
     the streaming leg rests on. Also pins that the stream actually ran as
-    MULTIPLE micro-batches (4 staged files, maxFilesPerTrigger 1), not one."""
+    MULTIPLE micro-batches (4 staged files, maxFilesPerTrigger 1), not one,
+    and that the staged files replay in an unambiguous order: distinct,
+    ascending mtimes in name order, so the gate's footer count for
+    micro-batch i is the i-th file's."""
     import os
 
     from ting_data_etl_spark.operators.curation import (
@@ -261,12 +264,22 @@ def test_streaming_arrival_gate_equals_batch_composition(spark, sf_dir):
     from ting_data_etl_spark.operators.incremental import (
         _batch_pred,
         _stage_batch_arrivals,
+        _staged_batch_rows,
         streaming_incremental_arrival_gate,
     )
 
     staged = _stage_batch_arrivals(spark, sf_dir)
-    n_files = len([f for f in os.listdir(staged) if f.endswith(".parquet")])
-    assert n_files == 4
+    files = sorted(
+        os.path.join(staged, f)
+        for f in os.listdir(staged)
+        if f.endswith(".parquet")
+    )
+    assert len(files) == 4
+    mtimes = [os.path.getmtime(f) for f in files]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    assert _staged_batch_rows(staged) == [
+        spark.read.parquet(f).count() for f in files
+    ]
     got = sorted(
         map(
             tuple,
@@ -1775,70 +1788,3 @@ class TestIncrementalSelectionMemo:
         assert man == sink
         assert I._selected_post_ids(spark, sf_dir) is post
 
-
-def test_arrival_gate_row_counts_follow_the_batch_file_under_tied_mtimes(
-    spark, tmp_path
-):
-    """Staged files with tied mtimes replay in listing order, not name
-    order, so a footer count picked by batch position can belong to
-    another file and send a large drop down the small-drop path. Keyed
-    by the file the stream logged for the batch, each micro-batch gets
-    its own footer count and so the right gate path."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ting_data_etl_spark.operators.dedup import MINHASH_BANDS
-    from ting_data_etl_spark.operators.incremental import (
-        PROBE_PRUNE_KEYS,
-        _batch_rows,
-        _batch_source_files,
-        _staged_file_rows,
-    )
-
-    stage = tmp_path / "arrivals"
-    stage.mkdir()
-    small = 3
-    large = PROBE_PRUNE_KEYS // MINHASH_BANDS + 50
-    # equal mtimes: the stream replays in directory-listing order, which
-    # need not be name order (on ext4 it is hash order; here x1 lists first)
-    for name, n in (("x1.parquet", large), ("x0.parquet", small)):
-        pq.write_table(pa.table({"doc_id": list(range(n))}), stage / name)
-        os.utime(stage / name, (1_700_000_000, 1_700_000_000))
-    rows_by_file = _staged_file_rows(str(stage))
-    assert sorted(rows_by_file.values()) == [small, large]
-    checkpoint = str(tmp_path / "checkpoint")
-
-    seen = []
-
-    def record(batch_df, batch_id):
-        files = _batch_source_files(checkpoint, batch_id)
-        assert len(files) == 1 and files[0] in rows_by_file, files
-        n = _batch_rows(batch_df, files, rows_by_file)
-        seen.append((n, batch_df.count()))
-
-    q = (
-        spark.readStream.schema("doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(stage))
-        .writeStream.foreachBatch(record)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert sorted(seen) == [(small, small), (large, large)]
-    small_path = [
-        n * MINHASH_BANDS <= PROBE_PRUNE_KEYS
-        for n, _ in sorted(seen)
-    ]
-    assert small_path == [True, False]
-
-    # a footer count only for exactly one known file; count() otherwise
-    one = spark.read.parquet(str(stage / "x0.parquet"))
-    lying = {p: 7 for p in rows_by_file}
-    assert _batch_rows(one, list(lying)[:1], lying) == 7
-    assert _batch_rows(one, list(lying), lying) == small
-    assert _batch_rows(one, ["/elsewhere.parquet"], lying) == small
-    assert _batch_source_files(checkpoint, 99) == []

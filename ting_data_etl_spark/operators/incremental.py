@@ -1538,66 +1538,30 @@ LEFT JOIN hits h ON d.doc_id = h.doc_id
 # the arrival gate's size gate needs ONLY the batch row count, and the gate
 # staged the stream's files itself — their parquet footers carry exact row
 # counts. Reading footers once driver-side replaces a full count() action
-# (plan + schedule + scan) per trigger. The counts are keyed by file path
-# and looked up through the files the stream's source logged for the batch,
-# so the mapping does not rest on the replay order (files with tied mtimes
-# replay in listing order, not name order). A miss only picks the other
+# (plan + schedule + scan) per trigger. A mapping miss only picks the other
 # PERFORMANCE path (the In-prune filters the index to a superset of the
 # batch's bands either way), so the fallback count() is for robustness,
 # not correctness.
-def _staged_file_rows(stage_dir: str) -> dict[str, int]:
-    """Footer row count of every parquet file in *stage_dir*, by real path."""
+def _staged_batch_rows(stage_dir: str) -> list[int]:
+    """Footer row counts of *stage_dir*'s parquet files in replay order.
+
+    With ``maxFilesPerTrigger`` 1 the file stream source replays files
+    oldest mtime first, so micro-batch ``i`` reads the ``i``-th file by
+    mtime. :func:`_stage_batch_arrivals` gives its files distinct,
+    ascending mtimes (in name order), so that order is unambiguous.
+    """
     try:
         import pyarrow.parquet as pq
 
-        return {
-            os.path.realpath(p): pq.ParquetFile(p).metadata.num_rows
-            for p in (
-                os.path.join(stage_dir, f)
-                for f in os.listdir(stage_dir)
-                if f.endswith(".parquet")
-            )
-        }
-    except (ImportError, OSError, ValueError):
-        return {}
-
-
-def _batch_source_files(checkpoint: str, batch_id: int) -> list[str]:
-    """The files a fresh one-source file stream logged for micro-batch
-    *batch_id*, as local paths ([] when the log entry cannot be read).
-
-    ``foreachBatch`` hands the batch over as an RDD-backed plan, so its
-    ``DataFrame.inputFiles()`` is empty; the file source's own log,
-    ``<checkpoint>/sources/0/<id>`` (a ``v1`` line, then one JSON entry per
-    file), names them. Its ids count the source's offsets, which match the
-    micro-batch ids when every batch reads one offset from a new checkpoint.
-    """
-    import json
-    from urllib.parse import unquote, urlparse
-
-    try:
-        log = os.path.join(checkpoint, "sources", "0", str(batch_id))
-        with open(log) as f:
-            version, *entries = f.read().splitlines()
-        if version != "v1":
-            return []
-        return [
-            os.path.realpath(unquote(urlparse(json.loads(e)["path"]).path))
-            for e in entries
-            if e
+        paths = [
+            os.path.join(stage_dir, f)
+            for f in os.listdir(stage_dir)
+            if f.endswith(".parquet")
         ]
-    except (OSError, ValueError, KeyError):
+        paths.sort(key=lambda p: (os.path.getmtime(p), p))
+        return [pq.ParquetFile(p).metadata.num_rows for p in paths]
+    except (ImportError, OSError, ValueError):
         return []
-
-
-def _batch_rows(
-    batch_df: DataFrame, files: list[str], rows_by_file: dict[str, int]
-) -> int:
-    """Rows of a micro-batch: the footer count when the batch read exactly
-    one known file, else ``count()``."""
-    if len(files) == 1 and files[0] in rows_by_file:
-        return rows_by_file[files[0]]
-    return batch_df.count()
 
 
 @register("streaming_incremental_arrival_gate", oracle=_sql_arrival_gate)
@@ -1659,8 +1623,7 @@ def streaming_incremental_arrival_gate(
     base = new_run_dir(os.path.join(tempfile.gettempdir(), "ting_arrival_gate"))
     os.makedirs(base, exist_ok=True)  # per-batch subdirs land under it
 
-    rows_by_file = _staged_file_rows(staged)
-    checkpoint = os.path.join(base, "_checkpoint")
+    rows_by_batch = _staged_batch_rows(staged)
 
     # built ONCE per gate invocation, reused across triggers: unresolved
     # Columns are DataFrame-independent (OPTIMIZATION r16, same py4j
@@ -1700,8 +1663,11 @@ def streaming_incremental_arrival_gate(
             # ~every band; for them the no-shuffle bucketed join is the win
             # and the extra signature pass would cost more than it prunes.
             idx = standing_capped
-            files = _batch_source_files(checkpoint, batch_id)
-            n_rows = _batch_rows(batch_df, files, rows_by_file)
+            n_rows = (
+                rows_by_batch[batch_id]
+                if batch_id < len(rows_by_batch)
+                else batch_df.count()
+            )
             # OPTIMIZATION r16 (guide §2.1): for a SMALL drop, AQE fragments
             # the per-trigger write into ~10 one-task query-stage jobs, each
             # paying ~0.1 s of driver re-planning — on a plan whose joins are
@@ -1758,7 +1724,6 @@ def streaming_incremental_arrival_gate(
     try:
         q = (
             stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )

@@ -95,10 +95,11 @@ def driver_java_options(long_lived: bool = False) -> str:
     # 102.1→52.3 s for a cold corpus build, with median set-up time 1-2 s
     # lower. A long session is the other way round: one bench.py run at
     # sf0.1 (161 queries, cold then warm pass) was 53% slower warm with
-    # C1 only (211.9→324.7 s), so harnesses that run many queries or
-    # large inputs in one session pass long_lived=True and keep full
-    # tiered C2. The flag only acts at JVM launch: a reused session keeps
-    # the profile its JVM started with.
+    # C1 only (211.9→324.7 s). Callers that ran faster under C2 when
+    # timed both ways (bench.py, the test suite, and the tools listed in
+    # README "Session settings") pass long_lived=True and keep full tiered
+    # C2. The flag only acts at JVM launch: a reused session keeps the
+    # profile its JVM started with.
     if not long_lived:
         opts.append("-XX:TieredStopAtLevel=1")
     opts.append(os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""))
@@ -115,9 +116,9 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's tuned defaults.
 
     ``long_lived=True`` keeps the driver JVM's full tiered (C2) JIT, for
-    sessions that run many queries or large inputs; the default is the
-    C1-only batch profile (see :func:`driver_java_options`). It only acts
-    when this call launches the JVM.
+    sessions that run many queries; the default is the C1-only batch
+    profile (see :func:`driver_java_options`). It only acts when this call
+    launches the JVM.
 
     ``shuffle_partitions`` defaults from ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
     read at CALL time (an import-time read frozen into a def-time default

@@ -901,7 +901,7 @@ def main() -> None:
 
     from ting_data_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="selection-scale", long_lived=True)
+    spark = get_spark(app_name="selection-scale")
     spark.sparkContext.setLogLevel("ERROR")
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
