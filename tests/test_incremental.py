@@ -3,6 +3,8 @@ from-scratch pipeline, stage by stage and end to end."""
 
 from __future__ import annotations
 
+import shutil
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -1269,6 +1271,9 @@ def test_sweep_respects_retained_catalog_references(tmp_path):
     sf = str(tmp_path / "ds")
     os.makedirs(sf)
     root = os.path.dirname(D._stage_dir(sf, ["x"]))
+    # the stage root lives outside tmp_path, keyed by tmp_path's hash: a
+    # run that got the same pytest-N dir earlier leaves it behind
+    shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
     referenced = os.path.join(root, "incrsel_shardfiles_16_aa")
     unreferenced = os.path.join(root, "incrsel_ledger_bb")
@@ -1305,6 +1310,9 @@ def test_sweep_fails_closed_on_unreadable_retained_catalog(tmp_path):
     sf = str(tmp_path / "ds")
     os.makedirs(sf)
     root = os.path.dirname(D._stage_dir(sf, ["x"]))
+    # the stage root lives outside tmp_path, keyed by tmp_path's hash: a
+    # run that got the same pytest-N dir earlier leaves it behind
+    shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root)
     stale = os.path.join(root, "incrsel_ledger_bb")  # gen 0: sweep target
     os.makedirs(stale)

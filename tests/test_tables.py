@@ -18,7 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from ting_data_etl_spark.sources.tables import TABLES, load_table
+from ting_data_etl_spark.sources.tables import TABLES, footer_schema, load_table
 
 # Dtype contract per table: column -> type-check predicate. Only the columns
 # the engine's operators actually depend on are pinned.
@@ -65,6 +65,31 @@ def test_all_tables_load_and_dtype_canary(spark, sf_dir):
         "testdata schema drift — fix ting_data_etl_spark/sources/tables.py "
         "normalization or update operator assumptions:\n  " + "\n  ".join(problems)
     )
+
+
+def test_footer_schema_matches_spark_inference(spark, sf_dir, tmp_path):
+    """``load_table`` types a table from its parquet footer instead of
+    letting Spark infer it: the two must agree for every table it serves
+    that way, and for a perfbench-shaped naive ``timestamp[us]`` column
+    (``TIMESTAMP_NTZ`` under Spark's inference)."""
+    import os
+
+    ts = tmp_path / "ts_us.parquet"
+    pq.write_table(
+        pa.table({"ts": pa.array(_TS, type=pa.timestamp("us")), "k": [1, 2]}),
+        str(ts),
+    )
+    paths = [os.path.join(sf_dir, f"{t}.parquet") for t in TABLES if t != "events"]
+    for path in [*paths, str(ts)]:
+        assert footer_schema(path) == spark.read.parquet(path).schema, path
+    assert isinstance(footer_schema(str(ts))["ts"].dataType, T.TimestampNTZType)
+
+
+def test_load_table_starts_no_job(spark, sf_dir, count_jobs):
+    """Loading a table reads its footer on the driver: no Spark job."""
+    tables = [t for t in TABLES if t != "events"]
+    n = count_jobs(lambda: [load_table(spark, sf_dir, t).schema for t in tables])
+    assert n == 0, n
 
 
 _ROWS = {

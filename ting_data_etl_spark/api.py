@@ -398,10 +398,11 @@ class Pipeline:
         write_fanout(df, output_dir, partition_cols=partition_cols, fmt=fmt)
 
     def verify_fan_out(self, source: DataFrame, output_dir: str) -> DataFrame:
-        """Write *source* fanned out, read it back, and return the
-        completeness/invariant check report (V1+V2+O4; the V3 contract is
-        every violation count == 0) — ``operators.verify.
-        fanout_verification_report``."""
+        """Write *source* fanned out and return the completeness/invariant
+        check report on the tree (V1+V2+O4; the V3 contract is every
+        violation count == 0) — ``operators.verify.
+        fanout_verification_report``. The write runs now; the report is
+        one lazy plan that reads the tree back when it is collected."""
         from ting_data_etl_spark.operators.verify import (
             fanout_verification_report,
         )

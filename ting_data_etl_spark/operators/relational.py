@@ -125,8 +125,7 @@ def bottom_k_per_group(
 def set_difference(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
     """Rows of *left* whose key tuple is absent from *right* (SURVEY §2.8 U2).
 
-    Left-anti join — Catalyst broadcasts the right side when small, which is
-    the common case for the file-inventory checks this backs
-    (reference ``verify_fanout.py:41-46``).
+    Left-anti join — Catalyst broadcasts the right side when small, the
+    common case for inventory checks (reference ``verify_fanout.py:41-46``).
     """
     return left.join(right, list(on), "left_anti")

@@ -7,23 +7,28 @@ equal its directory name (``:87-97``) — with ≤5 sampled violations per file
 (``:96-97``, O4) and a nonzero exit code on any defect (``:187-188``, V3).
 
 Spark-first re-expression: the fan-out sink writes a Hive-partitioned tree,
-reading it back re-derives the partition key from directory names, and the
-checks become three small DataFrame jobs:
+reading it back (with an explicit all-string key schema) re-derives the
+partition key from directory names, and the checks become ONE lazy report
+plan that runs when the report is collected:
 
-* **V1 completeness** — expected (key, src) pairs from the SOURCE data
-  anti-joined both ways against the distinct pairs found on disk;
+* **V1 completeness** — per key, the set of src values the SOURCE data
+  expects against the set found on disk, from one aggregation over the
+  union of both: a pair with no rows on disk is missing, a pair the source
+  lacks is extra;
 * **V2 invariant** — the key value carried INSIDE the row must equal the
   partition value derived from the row's directory;
-* **O4 sampling** — ``row_number() <= k`` per key over any violations;
+* **O4 sampling** — at most k sampled violations per key; the report counts
+  them as ``Σ_store least(bad, k)``, which is what ``row_number() <= k``
+  keeps (:func:`sample_violations` is that row-level form);
 * **V3 contract** — the report's violation counts must all be zero, asserted
   by the oracle comparison (zeros are literals in the oracle SQL) and by
-  ``tests/test_verify.py`` (which also corrupts a tree and proves the checks
-  catch it).
+  ``tests/test_verify.py`` (which also corrupts a tree and proves the report
+  catches it).
 
-At 100 TB the read-back scans are pure metadata + columnar reads of two thin
-columns (partition pruning applies; payload columns are never read), and
-every check is an aggregate/anti-join on the partition key — the natural
-shuffle key of the tree being checked.
+At 100 TB the read-back scan is pure metadata + a read of two thin
+columns, and every check after it is an aggregate keyed on the store — the
+natural shuffle key of the tree being checked — over #stores rows, not data
+rows.
 """
 
 from __future__ import annotations
@@ -34,12 +39,12 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ting_data_etl_spark.operators.relational import set_difference
 from ting_data_etl_spark.registry import register
 from ting_data_etl_spark.sinks.fanout import write_fanout
 from ting_data_etl_spark.sources.tables import load_table
 
 VIOLATION_SAMPLE_K = 5  # reference verify_fanout.py:96-97
+PARTITION_COLS = ("store_id", "src")
 
 
 def fanout_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,36 +65,31 @@ def fanout_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def read_fanout_back(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Read a fan-out tree with partition discovery; keys become strings."""
-    df = (
-        spark.read.option("header", True)
+def read_fanout_back(
+    spark: SparkSession, output_dir: str, data_cols=("row_id", "store_key_copy")
+) -> DataFrame:
+    """Read a fan-out tree back with an explicit all-STRING schema.
+
+    *data_cols* are the columns inside the files, in the order the fan-out
+    wrote them. Typing the partition columns keeps keys such as ``007`` as
+    the strings the directories spell (the reference compares keys as
+    trimmed STRINGS, ``verify_fanout.py:94``), and an explicit schema runs
+    no header-inference job.
+    """
+    schema = ", ".join(f"`{c}` STRING" for c in (*data_cols, *PARTITION_COLS))
+    return (
+        spark.read.schema(schema)
+        .option("header", True)
         .option("basePath", output_dir)
-        .option("inferSchema", False)
         .csv(output_dir)
     )
-    # partition-column type inference may type dir values as int; the
-    # reference compares keys as trimmed STRINGS (verify_fanout.py:94)
-    return df.withColumn("store_id", F.col("store_id").cast("string")).withColumn(
-        "src", F.col("src").cast("string")
-    )
-
-
-def completeness_violations(
-    expected_pairs: DataFrame, found_pairs: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """V1: (missing, extra) (store, src) pairs via both-ways anti-joins."""
-    missing = set_difference(expected_pairs, found_pairs, ["store_id", "src"])
-    extra = set_difference(found_pairs, expected_pairs, ["store_id", "src"])
-    return missing, extra
 
 
 def _invariant_predicate() -> F.Column:
     """V2 predicate: embedded key != directory-derived partition key.
 
-    ONE definition shared by the count path and the sampling path — the
-    report branches on the count before sampling, so a drift between two
-    copies would make n_bad and the sampled rows silently disagree.
+    ONE definition shared by the report's count and by
+    :func:`invariant_violations`, so the two cannot drift apart.
     """
     return F.coalesce(F.trim(F.col("store_key_copy")), F.lit("")) != F.coalesce(
         F.col("store_id"), F.lit("")
@@ -113,55 +113,71 @@ def sample_violations(violations: DataFrame, k: int = VIOLATION_SAMPLE_K) -> Dat
     )
 
 
+def check_fanout_tree(
+    spark: SparkSession, source: DataFrame, output_dir: str
+) -> DataFrame:
+    """V1+V2+O4 over an already written fan-out tree of *source*.
+
+    Report rows: (check_name, n), as one lazy plan that runs when the
+    report is collected. The tree's rows and the source's rows are unioned
+    and aggregated ONCE per store: row and violation counts, plus the set
+    of src values found on disk and the set the source expects. A src in
+    the expected set only is a missing file, one in the found set only is
+    an extra file. O4 needs no window: a store's sampled violations are
+    ``least(bad, k)``, exactly the rows ``row_number() <= k`` keeps
+    (:func:`sample_violations`). At 100 TB everything after the scans
+    works on #stores rows holding #partition-pairs set elements.
+    """
+    data_cols = [c for c in source.columns if c not in PARTITION_COLS]
+    back = read_fanout_back(spark, output_dir, data_cols)
+    rows = back.select(
+        *PARTITION_COLS,
+        F.lit(1).alias("n"),
+        _invariant_predicate().cast("long").alias("bad"),
+        F.lit(False).alias("expected"),
+    ).unionByName(
+        source.select(
+            *PARTITION_COLS,
+            F.lit(0).alias("n"),
+            F.lit(0).cast("long").alias("bad"),
+            F.lit(True).alias("expected"),
+        )
+    )
+    pair = F.struct("src")  # unlike a bare src, keeps a NULL src in the sets
+    per_store = rows.groupBy("store_id").agg(
+        F.collect_set(F.when(~F.col("expected"), pair)).alias("found"),
+        F.collect_set(F.when(F.col("expected"), pair)).alias("wanted"),
+        F.sum("n").alias("rows"),
+        F.sum("bad").alias("bad"),
+    )
+    totals = per_store.agg(
+        F.sum(F.size(F.array_except("wanted", "found"))).alias("missing_store_files"),
+        F.sum(F.size(F.array_except("found", "wanted"))).alias("extra_store_files"),
+        F.sum("bad").alias("key_value_violations"),
+        F.sum(F.least("bad", F.lit(VIOLATION_SAMPLE_K))).alias("sampled_violations"),
+        F.sum("rows").alias("rows_checked"),
+        F.count_if((F.size("found") > 0) & F.col("store_id").isNotNull()).alias(
+            "stores_checked"
+        ),
+    )
+    checks = totals.columns
+    pairs = ", ".join(f"'{c}', CAST(COALESCE({c}, 0) AS BIGINT)" for c in checks)
+    return totals.selectExpr(f"stack({len(checks)}, {pairs}) AS (check_name, n)")
+
+
 def fanout_verification_report(
     spark: SparkSession, source: DataFrame, output_dir: str
 ) -> DataFrame:
-    """Write the tree, read it back, run V1+V2+O4; return the check report.
+    """Write *source* fanned out, then return :func:`check_fanout_tree`'s
+    report on the tree.
 
-    Report rows: (check_name, n). The V3 contract is that every ``*_violations``
-    and ``missing/extra`` count is 0 — asserted by the oracle twin (zero
-    literals) and by the pytest that corrupts a tree to prove detection.
-
-    Scale shape: the read-back tree is scanned ONCE — a single grouped
-    aggregation on (store, src) yields per-pair row counts and violation
-    counts, and every check (completeness anti-joins, totals, distinct
-    stores) derives from that small aggregate, which at 100 TB is
-    #partition-pairs rows, not data rows. The O4 violation-sampling scan
-    only runs when violations exist.
+    The write runs now; the report is lazy and reads the tree back when
+    collected. The V3 contract is that every ``*_violations`` and
+    ``missing/extra`` count is 0 — asserted by the oracle twin (zero
+    literals) and by the tests that corrupt a tree to prove detection.
     """
-    write_fanout(source, output_dir, partition_cols=("store_id", "src"))
-    back = read_fanout_back(spark, output_dir)
-
-    viol = _invariant_predicate().cast("long")
-    per_pair = (
-        back.groupBy("store_id", "src")
-        .agg(F.count("*").alias("n_rows"), F.sum(viol).alias("n_bad"))
-        .persist()
-    )
-    try:
-        expected = source.select("store_id", "src").distinct()
-        found = per_pair.select("store_id", "src")
-        missing, extra = completeness_violations(expected, found)
-        totals = per_pair.agg(
-            F.sum("n_rows").alias("rows"),
-            F.sum("n_bad").alias("bad"),
-            F.countDistinct("store_id").alias("stores"),
-        ).first()
-        n_bad = int(totals.bad or 0)
-        sampled = (
-            sample_violations(invariant_violations(back)).count() if n_bad else 0
-        )
-        rows = [
-            ("missing_store_files", missing.count()),
-            ("extra_store_files", extra.count()),
-            ("key_value_violations", n_bad),
-            ("sampled_violations", sampled),
-            ("rows_checked", int(totals.rows or 0)),
-            ("stores_checked", int(totals.stores or 0)),
-        ]
-        return spark.createDataFrame(rows, "check_name string, n long")
-    finally:
-        per_pair.unpersist()
+    write_fanout(source, output_dir, partition_cols=PARTITION_COLS)
+    return check_fanout_tree(spark, source, output_dir)
 
 
 _SQL_FANOUT_VERIFY = """

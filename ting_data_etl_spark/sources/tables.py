@@ -4,13 +4,20 @@
 ``spark.read.parquet`` — kept thin ON PURPOSE so Catalyst sees the raw scan
 and can push filters / prune columns into the parquet reader (check for
 ``PushedFilters`` / narrowed ``ReadSchema`` in ``.explain``).
+
+The schema comes from the file's parquet footer, read on the driver, so
+loading a table starts no Spark job; left to infer it, Spark runs one
+schema-inference job per ``spark.read.parquet`` call.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TABLES = [
     "region",
@@ -42,7 +49,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _load_events(spark, path)
-    return spark.read.parquet(path)
+    if not os.path.isfile(path):  # a directory or a remote URI: let Spark infer
+        return spark.read.parquet(path)
+    return spark.read.schema(footer_schema(path)).parquet(path)
+
+
+def footer_schema(path: str) -> T.StructType:
+    """The Spark schema of one parquet file, read from its footer.
+
+    ``prefer_timestamp_ntz`` maps a timestamp without UTC adjustment to
+    ``TIMESTAMP_NTZ``, as Spark's own inference does; without it
+    ``orders``/``lineitem`` timestamps would come back as ``TIMESTAMP``.
+    ``tests/test_tables.py`` pins this to ``spark.read.parquet(path).schema``.
+    """
+    return from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
@@ -61,7 +81,6 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     oracle comparisons stay exact.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     try:
         e = spark.read.parquet(path)
