@@ -151,6 +151,30 @@ def _union_find(nodes: list[int], pairs: list[tuple[int, int]]) -> dict:
     return {n: find(n) for n in nodes}
 
 
+def _jump_rounds(nodes: list[int], pairs: list[tuple[int, int]]) -> int:
+    """Rounds ``connected_components_jump`` takes: a hop and two pointer
+    jumps each, until a round leaves the label sum unchanged (never
+    before the second round)."""
+    adj: dict[int, list[int]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    comp = {n: n for n in nodes}
+    prev, rounds = None, 0
+    while True:
+        rounds += 1
+        comp = {
+            u: min([c] + [comp[v] for v in adj.get(u, [])])
+            for u, c in comp.items()
+        }
+        for _ in range(2):
+            comp = {u: min(c, comp.get(c, c)) for u, c in comp.items()}
+        total = sum(comp.values())
+        if rounds > 1 and total == prev:
+            return rounds
+        prev = total
+
+
 def _jump_components(spark, nodes: list[int], pairs: list[tuple[int, int]]):
     from ting_data_etl_spark.operators.dedup import connected_components_jump
 
@@ -179,6 +203,42 @@ class TestConnectedComponents:
 
 
 class TestPointerJumpCC:
+    def test_path_graph_jobs_per_round(self, spark, count_jobs, monkeypatch):
+        """One checkpoint job per round, with the fixpoint sum observed on
+        it: at most 8 jobs a round (the hop and both jumps, each query
+        stage a job under AQE) plus the 5 fixed jobs before the loop (the
+        pairs' persist+count runs 3, the edge and label checkpoints 1
+        each)."""
+        import ting_data_etl_spark.operators.dedup as dd
+        from ting_data_etl_spark.operators.relational import local_frame
+
+        checkpoints = []
+        tracked = dd._tracked_checkpoint
+
+        def counting(df):
+            checkpoints.append(df)
+            return tracked(df)
+
+        monkeypatch.setattr(dd, "_tracked_checkpoint", counting)
+        n = 17  # path 0-1-...-16: diameter 16 needs several rounds
+        path = [(i, i + 1) for i in range(n - 1)]
+        nodes = local_frame(spark, [(i,) for i in range(n)], "doc_id long")
+        pairs = local_frame(spark, path, "doc_a long, doc_b long")
+        out = []
+        jobs = count_jobs(
+            lambda: out.append(dd.connected_components_jump(nodes, pairs))
+        )
+        got = {r.doc_id: r.component for r in out[0].collect()}
+        assert got == _union_find(list(range(n)), path)
+        rounds = _jump_rounds(list(range(n)), path)
+        assert rounds >= 2
+        # edges and initial labels, then one checkpoint per round
+        assert len(checkpoints) == rounds + 2
+        assert jobs <= 8 * rounds + 5, (jobs, rounds)
+
+    def test_empty_nodes(self, spark):
+        assert _jump_components(spark, [], []) == {}
+
     def test_matches_union_find(self, spark):
         # long chain (deep graph), a star, a pair, singletons
         got = _jump_components(

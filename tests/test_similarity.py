@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import __spark_entry__ as entrymod
+import pytest
 from pyspark.sql import functions as F
 
 from ting_data_etl_spark.operators.similarity import (
@@ -19,6 +20,33 @@ class TestKmeansFit:
         b = kmeans_fit(_quantized(spark, sf_dir), iters=2)
         assert a == b
         assert len(a) == KMEANS_LISTS
+
+    def _tiny(self, spark, rows):
+        from ting_data_etl_spark.operators.relational import local_frame
+
+        return local_frame(spark, rows, "vec_id long, q array<long>")
+
+    def test_empty_sample_falls_back_to_full_input(self, spark):
+        # no vec_id hashes to 0 mod 10**9: the fit runs on all three rows
+        rows = [(1, [0, 0]), (2, [10, 10]), (3, [12, 10])]
+        got = kmeans_fit(
+            self._tiny(spark, rows), k=2, iters=1, sample_mod=10**9,
+            expected_dim=2,
+        )
+        assert len(got) == 2
+        assert sorted(got) == [[0, 0], [11, 10]]
+
+    def test_empty_input_raises(self, spark):
+        with pytest.raises(ValueError, match="no vectors"):
+            kmeans_fit(self._tiny(spark, []), k=2, iters=1, expected_dim=2)
+
+    def test_other_dimensionality_raises(self, spark):
+        rows = [(i, [i, i, i]) for i in range(4)]
+        with pytest.raises(ValueError, match="dimensionality 3 != expected 2"):
+            kmeans_fit(
+                self._tiny(spark, rows), k=2, iters=1, sample_mod=1,
+                expected_dim=2,
+            )
 
     def test_every_vector_gets_a_list(self, spark, sf_dir):
         import pyspark.sql.functions as F

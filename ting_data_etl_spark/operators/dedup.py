@@ -25,7 +25,7 @@ rows-only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ting_data_etl_spark.functions.text import (
@@ -1597,11 +1597,16 @@ def connected_components_jump(
     well-defined; chains of length n collapse in O(log n) rounds instead of
     the O(n) of plain propagation (the same round-compression goal as
     Kiveris et al.'s large-star/small-star, with a simpler invariant).
-    ``localCheckpoint`` truncates the lineage per generation so the plan
-    does not grow with the iteration count. Fixpoint = labels unchanged,
-    data-driven, with ``max_iters`` as the safety bound. Output equals a
-    union-find over the same pairs (pytest-pinned on chains, triangles,
-    and the LSH pair set).
+    Each round (the hop and both jumps) is ONE plan, checkpointed once with
+    ``localCheckpoint``: that truncates the lineage per generation, so the
+    plan does not grow with the iteration count, and the jumps' self-joins
+    reuse the hop's exchanges inside the one query. Fixpoint = labels
+    unchanged, data-driven, with ``max_iters`` as the safety bound: labels
+    only ever decrease, so an unchanged label sum is the fixpoint, and the
+    sum is observed (``DataFrame.observe``) on the checkpoint's own job
+    rather than read by a job of its own. Output equals a union-find over
+    the same pairs (pytest-pinned on chains, triangles, and the LSH pair
+    set).
     """
     # Materialize the PAIR set before the symmetric union references it
     # twice. persist+count, NOT localCheckpoint: localCheckpoint jobs over
@@ -1633,19 +1638,19 @@ def connected_components_jump(
     # (no-fixpoint raise, a Spark error mid-round), every pending label
     # generation — is unpersisted instead of leaking for the process
     # lifetime. ``pending`` holds every id this loop persisted and has not
-    # yet freed, so a failure between a mid-round checkpoint (hop, first
-    # jump) and the label_ids handoff frees those generations too. On
-    # success it holds exactly the final label generation, which must STAY
-    # persisted: it backs the returned (lineage-truncated) DataFrame.
+    # yet freed, so a failure between a round's checkpoint and the
+    # label_ids handoff frees that generation too. On success it holds
+    # exactly the final label generation, which must STAY persisted: it
+    # backs the returned (lineage-truncated) DataFrame.
     pending = set(label_ids)
     try:
-        for _ in range(max_iters):
+        for i in range(max_iters):
             nbr = (
                 edges.join(labels, edges["dst"] == labels["doc_id"])
                 .groupBy("src")
                 .agg(F.min("component").alias("nbr_min"))
             )
-            hopped = (
+            jumped = (
                 labels.join(nbr, labels["doc_id"] == nbr["src"], "left")
                 .select(
                     "doc_id",
@@ -1655,10 +1660,6 @@ def connected_components_jump(
                     ).alias("component"),
                 )
             )
-            # jump self-references the hop checkpoint
-            hopped, round_ids = _tracked_checkpoint(hopped)
-            pending |= round_ids
-            jumped = hopped
             for _jump in range(2):  # two jumps: path length ~quarters/round
                 ptr = jumped.select(
                     F.col("doc_id").alias("p_id"),
@@ -1676,20 +1677,20 @@ def connected_components_jump(
                         ).alias("component"),
                     )
                 )
-                jumped, jump_ids = _tracked_checkpoint(jumped)
-                pending |= jump_ids
-                round_ids |= jump_ids
-            # labels only ever decrease, so an unchanged total sum on the
-            # materialized checkpoint IS the fixpoint — one tiny agg, no join
-            total = jumped.agg(F.sum("component")).first()[0]
+            obs = Observation()
+            jumped, round_ids = _tracked_checkpoint(
+                jumped.observe(obs, F.sum("component").alias("total"))
+            )
+            pending |= round_ids
+            total = obs.get["total"]
             labels = jumped
-            # free superseded generations (old labels, hop, first jump) —
-            # only ids this loop created; keep this round's final checkpoint
-            freed = label_ids | (round_ids - jump_ids)
-            _unpersist_ids(spark, freed)
-            pending -= freed
-            label_ids = jump_ids
-            if prev_total is not None and total == prev_total:
+            # free the superseded generation — only ids this loop created
+            _unpersist_ids(spark, label_ids)
+            pending -= label_ids
+            label_ids = round_ids
+            # compared from the second round on: an empty node set sums to
+            # NULL in every round, which is a fixpoint too
+            if i and total == prev_total:
                 break
             prev_total = total
         else:

@@ -73,6 +73,7 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ting_data_etl_spark.operators.relational import local_frame
 from ting_data_etl_spark.registry import register
 # the 60-bit XOR member term lives in sampling (the manifest home); ONE
 # definition serves the rank-sharded manifest and this hash-sharded digest
@@ -3311,9 +3312,7 @@ def _snapshot_store(spark: SparkSession, sf_dir: str) -> str:
             )
             .select("doc_id", "n_toks", "shard")
         )
-        adds2 = spark.createDataFrame(
-            [], "doc_id long, n_toks long, shard int"
-        )
+        adds2 = local_frame(spark, [], "doc_id long, n_toks long, shard int")
         touched2 = sorted(  # bounded: ≤ N_SHARDS scalars
             r["shard"] for r in rem2.select("shard").distinct().collect()
         )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ting_data_etl_spark.operators.relational import local_frame
 from ting_data_etl_spark.registry import register
 from ting_data_etl_spark.sources.tables import load_table
 
@@ -57,8 +58,8 @@ def expectations_report(
         out.append(
             (f"unique:{':'.join(keys)}", row["__n"], row["__n"] - row["__uniq"])
         )
-    return spark.createDataFrame(
-        out, "check_name string, n_rows long, n_violations long"
+    return local_frame(
+        spark, out, "check_name string, n_rows long, n_violations long"
     )
 
 
@@ -175,7 +176,8 @@ def table_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("l_returnflag", s.n, 0, s.ndv_rf, None, None),
         ("l_shipdate", s.n, 0, None, _f(s.min_ship_us), _f(s.max_ship_us)),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "col_name string, n_rows long, n_nulls long, ndv long, "
         "min_val double, max_val double",

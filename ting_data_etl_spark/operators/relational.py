@@ -6,20 +6,53 @@ re-expressed as Catalyst-friendly DataFrame compositions:
 * pivot is Spark's native ``groupBy().pivot(values=...)`` — supplying the
   value list explicitly avoids the extra distinct-values job;
 * densification is a broadcast cross-join of group keys × a tiny literal
-  month spine (no shuffle on the spine side);
+  month spine (no shuffle on the spine side); the spine is a JVM
+  ``LocalRelation`` built by :func:`local_frame`;
 * top/bottom-k is a ``row_number`` window — a single shuffle on the group
   key, with a deterministic tiebreak column REQUIRED (pandas
   ``sort_values().head(5)`` is unstable under ties — reference
   ``aggregate_by_store.py:594, 706`` — we define the contract instead of
   inheriting the instability).
+
+:func:`local_frame` is the one way the package turns Python rows into a
+DataFrame.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side table as a JVM ``LocalRelation``.
+
+    *rows* are tuples in *schema*'s column order (a DDL string or a
+    ``StructType``); ``None`` cells are NULLs. The rows go to the JVM as
+    one Arrow table, so the frame is a ``LocalRelation`` and no Python
+    worker ever reads it. ``spark.createDataFrame(rows, ddl)`` instead
+    plans a ``LogicalRDD`` over a plain PythonRDD, whose runner environment
+    differs from the SQL runners' (no ``SPARK_SIMPLIFIED_TRACEBACK``), so
+    the first such frame in a process forks a second ``pyspark.daemon``
+    and its own workers (a 12-row frame took 1.4 s that way against 0.44 s
+    here, fresh session, 4 vCPUs). The frame's schema, types and
+    nullability included, is *schema* as given.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def pivot_years(
@@ -54,12 +87,13 @@ def densify_months(
 
     Mirrors reference ``aggregate_by_store.py:286-293`` (A4): each store gets
     exactly ``len(months)`` rows. Implemented as distinct-groups ×
-    literal-spine cross join (the spine is a broadcast of 12 literal rows —
-    no shuffle added beyond the one the distinct already needs) left-joined
+    literal-spine cross join (the spine is a broadcast of a 12-row
+    ``LocalRelation`` — no shuffle added beyond the one the distinct
+    already needs) left-joined
     back to the data, with ``coalesce(v, 0)`` reproducing zeros-not-NULLs.
     """
     spark = df.sparkSession
-    spine = spark.createDataFrame([(m,) for m in months], f"{month_col} int")
+    spine = local_frame(spark, [(m,) for m in months], f"{month_col} int")
     groups = df.select(*group_cols).distinct()
     dense = groups.crossJoin(F.broadcast(spine))
     out = dense.join(df, [*group_cols, month_col], "left")

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ting_data_etl_spark.operators.relational import local_frame
 from ting_data_etl_spark.plans.oracles import SQL_TOKEN_LIST
 from ting_data_etl_spark.registry import register
 from ting_data_etl_spark.sources.tables import load_table
@@ -367,8 +368,8 @@ def _band_offsets_with_total(
     spark = df.sparkSession
     return (
         F.broadcast(
-            spark.createDataFrame(
-                offsets, "__band int, row_offset long, total_offset long"
+            local_frame(
+                spark, offsets, "__band int, row_offset long, total_offset long"
             )
         ),
         tot_off,
@@ -1060,8 +1061,8 @@ def corpus_epoch_order(
             offsets.append((r["shard"], r["__band"], off))
             acc[r["shard"]] = off + r["n"]
         odf = F.broadcast(
-            spark.createDataFrame(
-                offsets, "shard int, __band int, row_offset long"
+            local_frame(
+                spark, offsets, "shard int, __band int, row_offset long"
             )
         )
         local = Window.partitionBy("shard", "__band").orderBy(
@@ -1355,7 +1356,8 @@ def _source_budget_head_plan(
     # integer arithmetic (total·PCT DIV 100) computed on the driver,
     # unchanged values.
     odf = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (src, band, off, int(acc[src]) * BUDGET_PCT // 100)
                 for src, band, off in offsets

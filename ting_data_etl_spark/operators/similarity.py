@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ting_data_etl_spark.exprcache import cached_exprs
 from ting_data_etl_spark.functions.vectors import dot_product, quantize_vec
 from ting_data_etl_spark.registry import register
 from ting_data_etl_spark.sources.tables import fan_out, load_table
@@ -589,8 +590,9 @@ def kmeans_fit(
     fit_parts = vectors.sparkSession.sparkContext.defaultParallelism
     sample = sample.coalesce(fit_parts).persist()
     try:
-        row = sample.select(F.size("q").alias("d")).first()
-        if row is None and sample_mod > 1:
+        # the init rows carry the dimensionality: no separate sizing job
+        init = sample.orderBy("h", "vec_id").limit(k).collect()
+        if not init and sample_mod > 1:
             # degenerate tiny corpus where no vec_id hashes to 0 mod
             # sample_mod: fit on the full corpus rather than crash. (The
             # SQL oracle would produce an empty centroid set here — a
@@ -603,10 +605,10 @@ def kmeans_fit(
                 .coalesce(fit_parts)
                 .persist()
             )
-            row = sample.select(F.size("q").alias("d")).first()
-        if row is None:
+            init = sample.orderBy("h", "vec_id").limit(k).collect()
+        if not init:
             raise ValueError("kmeans_fit: no vectors to fit (empty input)")
-        d = row.d
+        d = len(init[0].q)
         if d != expected_dim:
             # the SQL oracle's unrolled Lloyd CTEs hardcode the dim count
             # (range(1, dim+1)); a corpus of another width would fit a
@@ -620,20 +622,25 @@ def kmeans_fit(
                 "slice (the SQL oracle twin derives its per-dimension "
                 "terms from it)"
             )
-        init = sample.orderBy("h", "vec_id").limit(k).collect()
         centroids = [[int(x) for x in r.q] for r in init]
         # a sample smaller than k yields fewer lists — same shrink the SQL
         # oracle's LIMIT k init exhibits, and still a valid coarse quantizer
         k_eff = len(centroids)
+        # the d+1 aggregates do not depend on the centroids: built once per
+        # process (about 2,400 py4j round-trips at d=64), not per iteration
+        aggs = cached_exprs(
+            ("kmeans_sums", d),
+            lambda: [
+                F.count("*").alias("n"),
+                *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(d)],
+            ],
+        )
         for _ in range(iters):
             assign = nearest_lists_udf(centroids, 1)
             assigned = sample.select(
                 "q", F.element_at(assign(F.col("q")), 1).alias("list_id")
             )
-            sums = assigned.groupBy("list_id").agg(
-                F.count("*").alias("n"),
-                *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(d)],
-            )
+            sums = assigned.groupBy("list_id").agg(*aggs)
             got = {
                 r.list_id: [
                     math.floor(float(r[f"s{i}"]) / r.n) for i in range(d)

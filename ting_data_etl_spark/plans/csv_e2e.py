@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ting_data_etl_spark.functions.cleaning import parse_month, sum_exact, to_number
+from ting_data_etl_spark.operators.relational import local_frame
 from ting_data_etl_spark.plans.oracles import (
     sql_parse_month,
     sql_sum_exact,
@@ -270,6 +271,6 @@ def csv_dir_scan_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("valid"),
         ).first()
         profiles.append((os.path.basename(path), row.n, row.valid or 0))
-    return spark.createDataFrame(
-        profiles, "file_name string, n_rows long, n_valid_keys long"
+    return local_frame(
+        spark, profiles, "file_name string, n_rows long, n_valid_keys long"
     )

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ting_data_etl_spark.operators.relational import local_frame
+
 
 def scan_csv_dir(path: str) -> list[str]:
     """Enumerate ``*.csv`` files (case-insensitive ext) in a flat directory.
@@ -213,7 +215,7 @@ def read_messy_csv(
             f"{key_col!r} in the first {max_scan_bytes} bytes — file skipped",
             stacklevel=2,
         )
-        empty = spark.createDataFrame([], all_string_schema(["_skipped"]))
+        empty = local_frame(spark, [], all_string_schema(["_skipped"]))
         return MessyCsvResult(df=empty, header=[], meta_rows=meta, skipped=True)
 
     # Deduplicate header names the way BI exports need (a, a -> a, a_2).
